@@ -48,11 +48,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph.build import LinkGraph
-from graph_data_science_spark.pregel.spmv import (
-    detect_hot_sources,
-    prep_edges_sql_salted,
-    replicate_state_for_salts,
-)
+from graph_data_science_spark.pregel.spmv import salt_hot_keys, salted_gather_join
 from graph_data_science_spark.pregel.superstep import (
     SuperstepLoop,
     edge_lineage,
@@ -110,11 +106,7 @@ def label_propagation(
     # in-degree hub is the straggler here — salt its edges on src-hash
     # (same fix as the rank loops'/WCC's src-keyed salting; votes are a
     # sum-by-(src,label) aggregate, which recombines exactly).
-    hot = detect_hot_sources(edges, hot_degree_threshold, key="dst")
-    if hot is not None:
-        salted = prep_edges_sql_salted(edges, hot, key="dst", spread="src")
-        edges.unpersist()
-        edges = salted
+    edges, hot = salt_hot_keys(edges, hot_degree_threshold, key="dst", spread="src")
 
     loop = SuperstepLoop(
         spark,
@@ -131,17 +123,8 @@ def label_propagation(
     def wave(labels_df: DataFrame, parity: int) -> DataFrame:
         # Gather votes from out-neighbors: label(dst) weighted by edge weight,
         # updating only nodes with node_id % 2 == parity.
-        if hot is None:
-            gathered = edges.join(labels_df, edges["dst"] == labels_df["node"], "inner")
-        else:
-            lab_s = replicate_state_for_salts(labels_df.select("node", "label"), hot)
-            gathered = edges.join(
-                lab_s,
-                (edges["dst"] == lab_s["node"]) & (edges["salt"] == lab_s["salt"]),
-                "inner",
-            )
         votes = (
-            gathered
+            salted_gather_join(edges, hot, labels_df, edge_key="dst")
             .filter(F.pmod(F.col("src"), F.lit(2)) == parity)
             .groupBy(F.col("src").alias("n"), F.col("label").alias("cand"))
             .agg(F.sum("weight").alias("vote"))

@@ -26,19 +26,13 @@ global L2 normalization (the masterCompute analog is a driver-side agg).
 
 from __future__ import annotations
 
-import os
-
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph.build import LinkGraph
-from graph_data_science_spark.pregel.spmv import (
-    build_blocks,
-    spmv_messages,
-    sql_message_path,
-)
+from graph_data_science_spark.pregel.spmv import sql_message_path
 from graph_data_science_spark.pregel.superstep import (
     SuperstepLoop,
     edge_lineage,
@@ -110,29 +104,18 @@ def _rank_loop(
     name: str,
     num_blocks: int | None,
     hot_degree_threshold: int,
-    message_path: str = "sql",
     fuse: int = 1,
     initial_scores: DataFrame | None = None,
-    norm_clustered: bool = True,
 ) -> RankResult:
-    """``message_path``: 'sql' (default) keeps the per-superstep SpMV fully
-    JVM-side (co-partitioned join + hash agg — the fast path for reducible
-    messages); 'arrow' uses the CSR-block pandas-UDF gather-scatter kernel
-    (the general path for non-Catalyst-expressible compute). Results are
-    identical; see spmv.py for the measured tradeoff."""
+    """Delta-push rank loop shared by pagerank and article_rank; each
+    superstep's messages come from ``spmv.sql_message_path``."""
     spark = norm_edges.sparkSession
     n = graph.with_node_count()
-    if message_path == "arrow":
-        blocked = build_blocks(
-            norm_edges, n, num_blocks=num_blocks, hot_degree_threshold=hot_degree_threshold
-        )
-        msg_fn = lambda active: spmv_messages(blocked, active)  # noqa: E731
-    else:
-        # norm_edges came out of the window normalization already
-        # hash-partitioned by src at num_blocks — skip the re-exchange.
-        prepped, msg_fn = sql_message_path(
-            norm_edges, num_blocks, hot_degree_threshold, clustered=norm_clustered
-        )
+    # norm_edges came out of the window normalization already
+    # hash-partitioned by src at num_blocks — skip the re-exchange.
+    prepped, msg_fn = sql_message_path(
+        norm_edges, num_blocks, hot_degree_threshold, clustered=True
+    )
     # auto_free_prev=False: committed delta frames are retained in `pending`
     # until the next fold — _fold() frees them once summed.
     loop = SuperstepLoop(
@@ -172,7 +155,7 @@ def _rank_loop(
     # superstep 6-8 with fold_every=8 and stay flat at 4 (A/B, 10M-edge
     # cycle graph, local[8]; see BENCH r3 notes).
     alpha = 1.0 - damping
-    fold_every = int(os.environ.get("SPARK_GRAFT_FOLD_EVERY", "4"))
+    fold_every = 4
     spark_ = spark
 
     def _fold(running: DataFrame | None, frames: list[DataFrame]) -> DataFrame:
@@ -328,10 +311,7 @@ def _rank_loop(
 
     ranks = _fold(running, pending) if pending else running
     loop_wall = _time.monotonic() - loop_t0
-    if message_path == "arrow":
-        blocked.unpersist()
-    else:
-        prepped.unpersist()
+    prepped.unpersist()
 
     # delta_0 carries the init mass, so any node absent from the fold has
     # rank 0 (only possible for non-source nodes in personalized mode).
@@ -361,7 +341,6 @@ def pagerank(
     checkpoint_dir: str | None = None,
     num_blocks: int | None = None,
     hot_degree_threshold: int = 2_000_000,
-    message_path: str = "sql",
     fuse: int = 1,
     initial_scores: DataFrame | None = None,
 ) -> RankResult:
@@ -385,7 +364,7 @@ def pagerank(
     return _rank_loop(
         graph, norm, damping, tolerance, max_iterations, source_nodes,
         checkpoint_dir, "pagerank", num_blocks, hot_degree_threshold,
-        message_path=message_path, fuse=fuse, initial_scores=initial_scores,
+        fuse=fuse, initial_scores=initial_scores,
     )
 
 

@@ -30,11 +30,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph.build import LinkGraph
-from graph_data_science_spark.pregel.spmv import (
-    detect_hot_sources,
-    prep_edges_sql_salted,
-    replicate_state_for_salts,
-)
+from graph_data_science_spark.pregel.spmv import salt_hot_keys, salted_gather_join
 from graph_data_science_spark.pregel.superstep import (
     SuperstepLoop,
     edge_lineage,
@@ -82,11 +78,7 @@ def wcc(
     sym = e.select("src", "dst").union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     sym = sym.repartition(spark.sparkContext.defaultParallelism, "src").persist()
     sym.count()
-    hot = detect_hot_sources(sym, hot_degree_threshold)
-    if hot is not None:
-        salted = prep_edges_sql_salted(sym, hot)
-        sym.unpersist()
-        sym = salted
+    sym, hot = salt_hot_keys(sym, hot_degree_threshold)
 
     loop = SuperstepLoop(
         spark,
@@ -122,14 +114,7 @@ def wcc(
 
     it = start - 1
     for it in range(start, max_iterations + 1):
-        if hot is None:
-            gathered = sym.join(labels, sym["src"] == labels["node"], "inner")
-        else:
-            lab_s = replicate_state_for_salts(labels.select("node", "comp"), hot)
-            gathered = sym.join(
-                lab_s, (sym["src"] == lab_s["node"]) & (sym["salt"] == lab_s["salt"]), "inner"
-            )
-        nbr_min = gathered.groupBy(F.col("dst").alias("n")).agg(
+        nbr_min = salted_gather_join(sym, hot, labels).groupBy(F.col("dst").alias("n")).agg(
             F.min("comp").alias("nbr_comp")
         )
         stepped = (

@@ -44,12 +44,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph.build import LinkGraph
-from graph_data_science_spark.pregel.spmv import (
-    detect_hot_sources,
-    prep_edges_sql,
-    prep_edges_sql_salted,
-    replicate_state_for_salts,
-)
+from graph_data_science_spark.pregel.spmv import prep_edges_sql_skew, salted_gather_join
 from graph_data_science_spark.pregel.superstep import SuperstepLoop, edge_lineage
 
 _REDUCERS = {"sum": F.sum, "min": F.min, "max": F.max, "count": F.count}
@@ -138,23 +133,18 @@ def run_pregel(
     spark = graph.edges.sparkSession
     n = graph.with_node_count()
 
-    prepped = prep_edges_sql(
+    # Every built-in reducer is associative, so the hot-source salting of
+    # the native loops applies to user programs too (spmv.salt_hot_keys):
+    # hot senders' edges spread across salt sub-partitions, their sender
+    # rows replicated per salt by the gather.
+    prepped, hot = prep_edges_sql_skew(
         graph.edges.select("src", "dst", F.col("weight").alias("norm_w")),
-        num_partitions=num_partitions,
+        num_partitions,
+        hot_degree_threshold,
     )
     degrees = prepped.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("long").alias("_degree")
     )
-    # Every built-in reducer is associative, so the hot-source salting of
-    # the native loops applies to user programs too (spmv.sql_message_path
-    # rationale): hot senders' edges spread across salt sub-partitions,
-    # their sender rows replicated per salt below.
-    hot = detect_hot_sources(prepped, hot_degree_threshold)
-    if hot is not None:
-        degrees = degrees.localCheckpoint(eager=True)  # detach from the cache being swapped
-        salted = prep_edges_sql_salted(prepped, hot, num_partitions=num_partitions)
-        prepped.unpersist()
-        prepped = salted
 
     loop = SuperstepLoop(
         spark,
@@ -201,15 +191,8 @@ def run_pregel(
         mexpr = computation.message(sctx)
         if computation.apply_relationship_weight is not None:
             mexpr = computation.apply_relationship_weight(mexpr, F.col("norm_w"))
-        if hot is None:
-            joined = prepped.join(senders, prepped["src"] == senders["_snd"], "inner")
-        else:
-            snd = replicate_state_for_salts(senders, hot, key="_snd")
-            joined = prepped.join(
-                snd, (prepped["src"] == snd["_snd"]) & (prepped["salt"] == snd["salt"]), "inner"
-            )
         msgs = (
-            joined
+            salted_gather_join(prepped, hot, senders, state_key="_snd")
             .select(F.col("dst"), mexpr.alias("_mv"))
             .filter(F.col("_mv").isNotNull())
             .groupBy("dst")

@@ -1,38 +1,35 @@
-"""CSR-block SpMV: the vectorized gather-scatter at the heart of every superstep.
+"""Gather-scatter message passing: the SpMV at the heart of every superstep.
 
 GDS's Pregel runs user ``compute()`` over per-node adjacency cursors and
 reduces messages atomically on send (reference
 ``pregel/.../ReducingMessenger.java:85-106``; partitioning
 ``core/.../partition/PartitionUtils.java:50,126-204``). The Spark
-re-expression (SURVEY.md §2.C, §3.3):
+re-expression (SURVEY.md §2.C, §3.3) has two paths:
 
-- **CSR blocks**: edges are range-blocked by source id
-  (``block = src DIV block_width``) and cached pre-shuffled on the block
-  key, so every superstep reuses the same co-location — the analog of GDS's
-  RANGE node partitioning. Adjacency never moves again.
-- **Skew (DEGREE partitioning analog)**: a hot source whose degree exceeds
-  ``hot_degree_threshold`` has its out-edges *salted* across
-  ``ceil(degree/threshold)`` sub-groups by a hash of ``dst``; vertex state
-  is replicated only to the (block, salt) pairs that actually exist (a tiny
-  broadcast join). This is GDS's degree-balanced partitioning re-expressed
-  for a shared-nothing shuffle world — no single Arrow group ever holds more
-  than ~threshold edges.
-- **Gather-scatter kernel**: a cogrouped ``applyInPandas`` receives one
-  Arrow batch of edges and one of active vertex state per (block, salt),
-  scatters ``state[src] * norm_w`` contributions into a per-destination
-  partial sum with a C-speed pandas groupby (the map-side combine — the
-  analog of reduce-on-send), and emits ``(dst, partial)``.
-- **Shuffle-aggregate**: ``groupBy(dst).sum`` finishes the reduction;
-  Catalyst's partial+final hash aggregation gives a second combine level.
-
-No per-row Python executes: the kernel is NumPy/pandas vectorized over whole
-Arrow batches.
+- **JVM path (scalar, reducible messages)**: the edge table is cached
+  hash-partitioned and sorted by its join key (``prep_edges_sql``), so the
+  per-round edge⋈state join reads the edge side without an exchange or a
+  sort; ``groupBy(dst)`` with a reducible aggregate finishes the reduction
+  (Catalyst's partial+final hash aggregation is the reduce-on-send
+  analog). Every scalar loop — the rank family, WCC, label propagation,
+  the path relaxations, user Pregel programs — runs here.
+- **Skew (DEGREE partitioning analog)**: the decision lives in ONE place,
+  :func:`salt_hot_keys`. A hot key whose degree exceeds
+  ``hot_degree_threshold`` has its edges re-clustered across
+  ``ceil(degree/threshold)`` salt sub-partitions by a hash of the other
+  endpoint; :func:`salted_gather_join` replicates the matching state rows
+  per salt. It is the only gather that branches on whether the graph is
+  skewed, so every loop inherits the fix.
+- **Arrow/CSR path (array state only)**: ``build_blocks`` range-blocks
+  edges by source id and a cogrouped ``applyInPandas`` kernel sums
+  ``state[src].vec * norm_w`` per destination
+  (``spmv_messages_arrays``) — for embedding-valued state Catalyst can't
+  sum efficiently (FastRP).
 """
 
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -149,7 +146,6 @@ def prep_edges_sql(
     exchange *and* the O(|E| log |E|) sort on the edge side; only the
     (much smaller) vertex state is exchanged + sorted per round. Unsorted,
     Spark re-sorts the full edge table every superstep.
-    ``SPARK_GRAFT_SORT_EDGES=0`` restores the unsorted cache (A/B knob).
 
     ``clustered=True``: the caller guarantees ``edges`` is ALREADY
     hash-partitioned by ``src`` into ``num_partitions`` partitions (e.g. it
@@ -164,30 +160,32 @@ def prep_edges_sql(
     )
     if not clustered:
         prepped = prepped.repartition(num_partitions, "src")
-    if os.environ.get("SPARK_GRAFT_SORT_EDGES", "1") == "1":
-        prepped = prepped.sortWithinPartitions("src")
-    prepped = prepped.persist()
+    prepped = prepped.sortWithinPartitions("src").persist()
     prepped.count()
     return prepped
 
 
-def spmv_messages_sql(prepped_edges: DataFrame, state: DataFrame, value_col: str = "msg_val") -> DataFrame:
+def spmv_messages_sql(
+    prepped_edges: DataFrame,
+    hot: DataFrame | None,
+    state: DataFrame,
+    value_col: str = "msg_val",
+) -> DataFrame:
     """JVM-only gather-scatter for *reducible* messages (Pregel Reducer.Sum
-    analog): one co-partitioned join + one partial+final hash aggregation,
+    analog): Σ_{(u,v)∈E} state[u].value * norm_w → (dst, msg) as one
+    co-partitioned join (salted when ``hot`` is set, see
+    :func:`salted_gather_join`) + one partial+final hash aggregation,
     whole-stage codegen end to end — no Python in the superstep at all.
 
-    Measured on a 3.8M-edge transcript graph this is ~8× faster per
-    superstep than the Arrow/CSR path, because the cogroup must ship the
-    entire edge side across the JVM↔Python Arrow boundary every superstep
+    Measured on a 3.8M-edge transcript graph this was ~8× faster per
+    superstep than a scalar Arrow/CSR cogroup, which must ship the entire
+    edge side across the JVM↔Python Arrow boundary every superstep
     (~40 MB/s effective) while this path touches edges only inside
-    whole-stage codegen. Network-wise the two are equivalent on a cluster
-    (edges stay cached-partitioned; only state + messages shuffle) — the
-    Arrow/CSR path earns its keep solely for kernels Catalyst can't express
-    (array-valued vertex states, custom per-vertex compute like FastRP).
+    whole-stage codegen.
     """
     st = state.select(F.col("node"), F.col(value_col).cast("double").alias("_v"))
     return (
-        prepped_edges.join(st, prepped_edges["src"] == st["node"], "inner")
+        salted_gather_join(prepped_edges, hot, st)
         .groupBy("dst")
         .agg(F.sum(F.col("_v") * F.col("norm_w")).alias("msg"))
     )
@@ -198,8 +196,8 @@ def spmv_messages_arrays(
 ) -> DataFrame:
     """Array-state gather-scatter: Σ_{(u,v)∈E} state[u].vec * norm_w → (dst, vec).
 
-    The vector analog of :func:`spmv_messages` for algorithms whose vertex
-    state is an embedding (FastRP, HashGNN-style kernels) — exactly the
+    The vector analog of :func:`spmv_messages_sql` for algorithms whose
+    vertex state is an embedding (FastRP, HashGNN-style kernels) — exactly the
     case Catalyst can't express efficiently (array sums would need
     explode → d× row blowup → re-agg). ``state``: (node long,
     <value_col> array<double>). One Arrow round-trip per (block, salt)
@@ -253,50 +251,6 @@ def spmv_messages_arrays(
     )
 
 
-def spmv_messages(blocked: BlockedEdges, state: DataFrame, value_col: str = "msg_val") -> DataFrame:
-    """One gather-scatter: Σ_{(u,v) ∈ E} state[u].value * norm_w → (dst, msg).
-
-    ``state`` holds only *active* vertices (node long, <value_col> double) —
-    the vote-to-halt active set (reference ComputeStep.java:63-76).
-    Returns DataFrame (dst long, msg double) with one row per destination
-    that received at least one message.
-    """
-    width = blocked.block_width
-
-    st = state.select(
-        F.expr(f"node DIV {width}").cast("int").alias("block"),
-        "node",
-        F.col(value_col).cast("double").alias("val"),
-    )
-    # Replicate state only into the salted sub-groups that exist (tiny join);
-    # with no hot vertices every salt is 0 and the join is unnecessary.
-    if blocked.single_salt:
-        st = st.withColumn("salt", F.lit(0))
-    else:
-        st = st.join(F.broadcast(blocked.block_salts), "block")
-
-    def kernel(edges_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(edges_pdf) == 0 or len(state_pdf) == 0:
-            return pd.DataFrame({"dst": pd.Series(dtype="int64"), "msg": pd.Series(dtype="float64")})
-        base = int(edges_pdf["block"].iloc[0]) * width
-        vals = np.zeros(width, dtype=np.float64)
-        vals[state_pdf["node"].to_numpy() - base] = state_pdf["val"].to_numpy()
-        contrib = vals[edges_pdf["src"].to_numpy() - base] * edges_pdf["norm_w"].to_numpy()
-        mask = contrib != 0.0
-        if not mask.any():
-            return pd.DataFrame({"dst": pd.Series(dtype="int64"), "msg": pd.Series(dtype="float64")})
-        out = pd.DataFrame({"dst": edges_pdf["dst"].to_numpy()[mask], "msg": contrib[mask]})
-        # In-kernel pre-combine per destination (reduce-on-send analog).
-        return out.groupby("dst", sort=False, as_index=False)["msg"].sum()
-
-    partials = (
-        blocked.blocks.groupBy("block", "salt")
-        .cogroup(st.groupBy("block", "salt"))
-        .applyInPandas(kernel, "dst long, msg double")
-    )
-    return partials.groupBy("dst").agg(F.sum("msg").alias("msg"))
-
-
 def detect_hot_sources(
     prepped_edges: DataFrame, hot_degree_threshold: int, key: str = "src"
 ) -> DataFrame | None:
@@ -305,10 +259,10 @@ def detect_hot_sources(
 
     Returns a tiny broadcastable DataFrame ``(src long, nsalt int)`` with
     ``nsalt = ceil(degree / threshold)`` sub-groups per hot source, or
-    ``None`` when the graph has no hot sources (the common case — callers
-    then keep the plain single-key join path untouched).
+    ``None`` when the graph has no hot sources (the common case — the
+    gather then keeps the plain single-key join).
 
-    Why this matters on the SQL message path: ``spmv_messages_sql`` joins
+    Why this matters on the JVM message path: ``spmv_messages_sql`` joins
     edges to state on ``src`` under the cached HashPartitioning(src), so a
     mega-hub source (a tool entity linked from millions of turns in the
     10^12-turn transcript graph) lands ALL its out-edges in one partition —
@@ -324,7 +278,8 @@ def detect_hot_sources(
     ``key``: the edge column the per-round state join keys on — ``src``
     for push/gather-from-source loops (rank family, WCC), ``dst`` for
     pull loops (label propagation votes). The returned hot map always
-    names its column ``src`` so the salting helpers compose either way.
+    names its column ``src`` so :func:`salt_hot_keys` and
+    :func:`salted_gather_join` compose either way.
     """
     hot_rows = (
         prepped_edges.groupBy(key)
@@ -344,32 +299,36 @@ def detect_hot_sources(
     )
 
 
-def prep_edges_sql_salted(
-    prepped_edges: DataFrame,
-    hot: DataFrame,
-    num_partitions: int | None = None,
+def salt_hot_keys(
+    edges: DataFrame,
+    hot_degree_threshold: int,
     key: str = "src",
     spread: str = "dst",
-) -> DataFrame:
-    """Re-cluster a prepped edge cache on ``(key, salt)`` so every hot
-    key's edges are spread across ``nsalt`` partitions.
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The engine's one skew decision: detect hot ``key`` values in a
+    cached, ``key``-clustered edge table and, if there are any, re-cluster
+    the cache on ``(key, salt)`` and unpersist the old one.
 
+    Returns ``(edges, hot)``. On an unskewed graph ``hot`` is None and
+    ``edges`` is the input cache untouched (unchanged plans). Otherwise
     ``salt = pmod(xxhash64(spread), nsalt)`` for hot keys (0 otherwise) —
     the same other-endpoint-hash sub-grouping as the Arrow path's
-    ``build_blocks``. The result is hash-partitioned AND sorted on
-    ``(key, salt)`` and cached, so every superstep's SortMergeJoin still
-    reads the edge side exchange-free and sort-free; only the (small)
-    state side is exchanged per round, exactly as in the unsalted plan.
-    Skewed graphs pay ONE extra full-edge shuffle at build time and get
-    flat superstep task histograms in return.
+    ``build_blocks`` — and the new cache is hash-partitioned AND sorted on
+    ``(key, salt)``, so every superstep's SortMergeJoin still reads the
+    edge side exchange-free and sort-free; only the (small) state side is
+    exchanged per round, exactly as in the unsalted plan. Skewed graphs
+    pay ONE extra full-edge shuffle at build time and get flat superstep
+    task histograms in return. Pair with :func:`salted_gather_join`
+    (same ``key`` as its ``edge_key``).
     """
-    spark = prepped_edges.sparkSession
+    hot = detect_hot_sources(edges, hot_degree_threshold, key=key)
+    if hot is None:
+        return edges, None
     if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = (
-        prepped_edges.join(
-            F.broadcast(hot.withColumnRenamed("src", key)), key, "left"
-        )
+        num_partitions = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    salted = (
+        edges.join(F.broadcast(hot.withColumnRenamed("src", key)), key, "left")
         .withColumn(
             "salt",
             F.when(
@@ -379,12 +338,12 @@ def prep_edges_sql_salted(
         )
         .drop("nsalt")
         .repartition(num_partitions, key, "salt")
+        .sortWithinPartitions(key, "salt")
+        .persist()
     )
-    if os.environ.get("SPARK_GRAFT_SORT_EDGES", "1") == "1":
-        e = e.sortWithinPartitions(key, "salt")
-    e = e.persist()
-    e.count()
-    return e
+    salted.count()
+    edges.unpersist()
+    return salted, hot
 
 
 def sql_message_path(
@@ -405,17 +364,13 @@ def sql_message_path(
     ``(src, salt)`` and every superstep joins salted — the hub's gather
     becomes ``ceil(degree/threshold)`` parallel tasks instead of one
     straggler that AQE (disabled inside superstep commits) cannot split.
-    SQL-path analog of ``build_blocks``'s DEGREE salting; reference
-    ``core/.../partition/PartitionUtils.java:126-204``. Measured on a
-    20M-edge graph with one source owning half the edges: 9.93 → 3.58 s
-    median superstep (`bench_experiments/skew_ab_*`).
+    Measured on a 20M-edge graph with one source owning half the edges:
+    9.93 → 3.58 s median superstep (`bench_experiments/skew_ab_*`).
     """
     prepped, hot = prep_edges_sql_skew(
         norm_edges, num_partitions, hot_degree_threshold, clustered=clustered
     )
-    if hot is None:
-        return prepped, (lambda active: spmv_messages_sql(prepped, active))
-    return prepped, (lambda active: spmv_messages_sql_salted(prepped, hot, active))
+    return prepped, (lambda active: spmv_messages_sql(prepped, hot, active))
 
 
 def prep_edges_sql_skew(
@@ -424,44 +379,34 @@ def prep_edges_sql_skew(
     hot_degree_threshold: int,
     clustered: bool = False,
 ):
-    """Prep + hot-detect in one call for loops whose gather is NOT a plain
-    weighted sum (min-relaxation frontiers, label votes): returns
-    ``(prepped, hot)`` where ``hot`` is None on unskewed graphs (plain
-    src-clustered cache, unchanged plan) or the tiny hot map when the cache
-    was re-clustered salted. Pair with :func:`salted_gather_join` and apply
-    the loop's own (reducible) aggregate on top."""
+    """``prep_edges_sql`` + :func:`salt_hot_keys` on ``src``: returns
+    ``(prepped, hot)`` for loops whose gather is NOT a plain weighted sum
+    (min-relaxation frontiers, user Pregel reducers). Pair with
+    :func:`salted_gather_join` and apply the loop's own (reducible)
+    aggregate on top."""
     prepped = prep_edges_sql(norm_edges, num_partitions=num_partitions, clustered=clustered)
-    hot = detect_hot_sources(prepped, hot_degree_threshold)
-    if hot is None:
-        return prepped, None
-    salted = prep_edges_sql_salted(prepped, hot, num_partitions=num_partitions)
-    prepped.unpersist()
-    return salted, hot
+    return salt_hot_keys(prepped, hot_degree_threshold, num_partitions=num_partitions)
 
 
 def salted_gather_join(
-    prepped: DataFrame, hot: DataFrame | None, state: DataFrame, state_key: str = "node"
+    prepped: DataFrame,
+    hot: DataFrame | None,
+    state: DataFrame,
+    state_key: str = "node",
+    edge_key: str = "src",
 ) -> DataFrame:
-    """The per-round edges ⋈ state join on ``src``, salted when ``hot`` is
-    set. The caller applies its own aggregate on the result — which must be
-    reducible (sum/min/max/count) for salting to recombine exactly, since a
-    hot source's rows arrive in ``nsalt`` partial groups."""
+    """The per-round edges ⋈ state join on ``edge_key``, salted when
+    ``hot`` is set (the ``hot`` that :func:`salt_hot_keys` returned for the
+    same key). The caller applies its own aggregate on the result — which
+    must be reducible (sum/min/max/count) for salting to recombine exactly,
+    since a hot key's rows arrive in ``nsalt`` partial groups."""
     if hot is None:
-        return prepped.join(state, prepped["src"] == state[state_key], "inner")
-    st = replicate_state_for_salts(state, hot, key=state_key)
-    return prepped.join(
-        st, (prepped["src"] == st[state_key]) & (prepped["salt"] == st["salt"]), "inner"
-    )
-
-
-def replicate_state_for_salts(state: DataFrame, hot: DataFrame, key: str = "node") -> DataFrame:
-    """Add a ``salt`` column to a vertex-state frame for a salted edge join:
-    rows whose ``key`` is a hot source are duplicated once per salt
-    sub-group (``nsalt`` copies), everything else gets salt 0. The hot map
-    is tiny by construction, so this is a broadcast join + a bounded
-    explode — replication cost is O(|hot| × nsalt), not O(|V|)."""
-    return (
-        state.join(F.broadcast(hot.withColumnRenamed("src", key)), key, "left")
+        return prepped.join(state, prepped[edge_key] == state[state_key], "inner")
+    # State rows of hot keys are replicated once per salt sub-group, all
+    # others get salt 0. The hot map is tiny by construction, so this is a
+    # broadcast join + a bounded explode: O(|hot| × nsalt) extra rows.
+    st = (
+        state.join(F.broadcast(hot.withColumnRenamed("src", state_key)), state_key, "left")
         .withColumn(
             "_salts",
             F.when(
@@ -473,30 +418,6 @@ def replicate_state_for_salts(state: DataFrame, hot: DataFrame, key: str = "node
         .withColumn("salt", F.col("_salt").cast("int"))
         .drop("nsalt", "_salts", "_salt")
     )
-
-
-def spmv_messages_sql_salted(
-    prepped_salted: DataFrame, hot: DataFrame, state: DataFrame, value_col: str = "msg_val"
-) -> DataFrame:
-    """Salted twin of :func:`spmv_messages_sql` for skewed graphs.
-
-    State rows for hot sources are replicated to every salt sub-group
-    (a broadcast join against the tiny hot map + a sequence explode — the
-    replication factor is ``nsalt`` for the handful of hot nodes and 1 for
-    everything else), then joined on ``(src, salt)``. The per-partition
-    partial aggregation and the final ``groupBy(dst)`` combine are
-    unchanged — a hot source's gather work is now ``nsalt`` parallel tasks
-    instead of one straggler.
-    """
-    st = replicate_state_for_salts(
-        state.select(F.col("node"), F.col(value_col).cast("double").alias("_v")), hot
-    )
-    return (
-        prepped_salted.join(
-            st,
-            (prepped_salted["src"] == st["node"]) & (prepped_salted["salt"] == st["salt"]),
-            "inner",
-        )
-        .groupBy("dst")
-        .agg(F.sum(F.col("_v") * F.col("norm_w")).alias("msg"))
+    return prepped.join(
+        st, (prepped[edge_key] == st[state_key]) & (prepped["salt"] == st["salt"]), "inner"
     )

@@ -48,20 +48,15 @@ METRICS_SCHEMA = (
 # 100M-edge constant-work run OOMs at the heap-per-core protocol's 36 g
 # without this (bench_experiments/, r3_100M notes). Serialized blocks are
 # several-fold smaller and spill to disk block-by-block instead of dying.
-_STATE_SER_MIN_ROWS = int(os.environ.get("SPARK_GRAFT_STATE_SER_MIN_ROWS", "50000000"))
+_STATE_SER_MIN_ROWS = 50_000_000
 
 
 def state_storage_level(node_count: int | None):
     """StorageLevel for committed in-memory superstep state, or ``None`` for
-    Spark's default (deserialized). Serialized above ``_STATE_SER_MIN_ROWS``
-    predicted state rows; ``SPARK_GRAFT_STATE_SER=1/0`` forces/disables."""
+    Spark's default (deserialized). Serialized at ``_STATE_SER_MIN_ROWS``
+    predicted state rows and above."""
     from pyspark.storagelevel import StorageLevel
 
-    forced = os.environ.get("SPARK_GRAFT_STATE_SER")
-    if forced == "1":
-        return StorageLevel.MEMORY_AND_DISK
-    if forced == "0":
-        return None
     if node_count is not None and node_count >= _STATE_SER_MIN_ROWS:
         return StorageLevel.MEMORY_AND_DISK
     return None
@@ -104,7 +99,6 @@ class SuperstepLoop:
         spark: SparkSession,
         name: str,
         checkpoint_dir: str | None = None,
-        checkpoint_interval: int = 1,
         lineage: str = "",
         auto_free_prev: bool = True,
     ) -> None:
@@ -117,15 +111,15 @@ class SuperstepLoop:
         self.spark = spark
         self.name = name
         self.dir = os.path.join(checkpoint_dir, name) if checkpoint_dir else None
-        self.checkpoint_interval = max(1, checkpoint_interval)
         self.lineage = lineage
         self.auto_free_prev = auto_free_prev
         self._prev_cached: DataFrame | None = None
         self.memory_metrics: list[dict] = []
         self._prediction: dict | None = None
-        # StorageLevel for in-memory state commits; predict() flips it to
-        # serialized for large vertex sets (see state_storage_level).
-        self.state_level = state_storage_level(None)
+        # StorageLevel for in-memory state commits (None = Spark's default);
+        # predict() flips it to serialized for large vertex sets (see
+        # state_storage_level).
+        self.state_level = None
 
     # -- memory estimation (reference DefaultMemoryGuard analog) ---------
     def predict(
@@ -251,7 +245,7 @@ class SuperstepLoop:
         the metrics counters.
         """
         t0 = time.monotonic()
-        durable = self.dir is not None and superstep % self.checkpoint_interval == 0
+        durable = self.dir is not None
         # AQE off for the superstep job only: adaptive execution re-plans
         # every materialization stage-by-stage (ResultQueryStage barriers),
         # pure overhead for loops whose per-round sizes are stable and
@@ -261,20 +255,12 @@ class SuperstepLoop:
         # immediately after the action so one-shot analytic queries
         # (similarity, triangles) keep AQE's skew handling.
         aqe_prev = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        if os.environ.get("SPARK_GRAFT_LOOP_AQE") != "1":
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
             if durable:
                 path = self._state_path(superstep)
                 state.write.mode("overwrite").parquet(path)
                 out = self.spark.read.parquet(path)
-            elif os.environ.get("SPARK_GRAFT_COMMIT_MODE", "local") == "roundtrip":
-                # Parquet round-trip on tmpfs instead of a heap-cached
-                # localCheckpoint: committed states live compressed in the page
-                # cache, not as deserialized rows in executor storage memory —
-                # long loops stop degrading from storage-eviction/GC pressure
-                # (the late-superstep slowdown measured in BENCH r3 scaling).
-                out = materialize_roundtrip(state, tag=f"commit_{self.name}", keep_last=None)
             else:
                 if self.state_level is not None:
                     out = state.localCheckpoint(eager=True, storageLevel=self.state_level)

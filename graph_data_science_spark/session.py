@@ -45,13 +45,9 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config(
-            "spark.sql.adaptive.enabled",
-            # A/B knob (default on): AQE re-plans every superstep job; the
-            # iterative loops have stable, known sizes, so the overhead is
-            # measurable — see BASELINE.md.
-            "false" if os.environ.get("SPARK_GRAFT_AQE") == "0" else "true",
-        )
+        # AQE on for one-shot analytic queries; SuperstepLoop.commit turns
+        # it off for the duration of each superstep job.
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

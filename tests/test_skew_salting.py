@@ -20,8 +20,8 @@ from graph_data_science_spark.graph.build import LinkGraph  # noqa: E402
 from graph_data_science_spark.pregel.spmv import (  # noqa: E402
     detect_hot_sources,
     prep_edges_sql,
-    prep_edges_sql_salted,
-    spmv_messages_sql_salted,
+    salt_hot_keys,
+    spmv_messages_sql,
 )
 
 
@@ -49,19 +49,20 @@ def test_salted_messages_match_unsalted(spark):
     g = _skewed_graph(spark)
     norm = g.edges.select("src", "dst", (F.lit(1.0) / F.lit(201.0)).alias("norm_w"))
     prepped = prep_edges_sql(norm)
-    hot = detect_hot_sources(prepped, hot_degree_threshold=50)
-    salted = prep_edges_sql_salted(prepped, hot)
     state = spark.range(201).select(
         F.col("id").alias("node"), (F.col("id") + 1.0).alias("msg_val")
     )
-    from graph_data_science_spark.pregel.spmv import spmv_messages_sql
+    # An unskewed threshold leaves the cache untouched: same frame, no hot map.
+    same, no_hot = salt_hot_keys(prepped, hot_degree_threshold=1000)
+    assert same is prepped and no_hot is None
 
-    want = {r["dst"]: r["msg"] for r in spmv_messages_sql(prepped, state).collect()}
-    got = {r["dst"]: r["msg"] for r in spmv_messages_sql_salted(salted, hot, state).collect()}
+    want = {r["dst"]: r["msg"] for r in spmv_messages_sql(prepped, None, state).collect()}
+    salted, hot = salt_hot_keys(prepped, hot_degree_threshold=50)
+    assert "salt" in salted.columns
+    got = {r["dst"]: r["msg"] for r in spmv_messages_sql(salted, hot, state).collect()}
     assert set(got) == set(want)
     for d in want:
         assert got[d] == pytest.approx(want[d], abs=1e-12)
-    prepped.unpersist()
     salted.unpersist()
 
 
@@ -105,16 +106,18 @@ def test_serialized_state_commit_equal_scores(spark, monkeypatch):
     # forcing it on a small graph must not change any score.
     from graph_data_science_spark.pregel import superstep as ss
 
+    from pyspark.storagelevel import StorageLevel
+
     g = _skewed_graph(spark)
     base = pagerank(g, tolerance=1e-7, max_iterations=150)
-    monkeypatch.setenv("SPARK_GRAFT_STATE_SER", "1")
-    ser = pagerank(g, tolerance=1e-7, max_iterations=150)
-    monkeypatch.delenv("SPARK_GRAFT_STATE_SER")
+    with monkeypatch.context() as m:
+        m.setattr(ss, "_STATE_SER_MIN_ROWS", 0)
+        ser = pagerank(g, tolerance=1e-7, max_iterations=150)
+    assert base.loop.state_level is None
+    assert ser.loop.state_level == StorageLevel.MEMORY_AND_DISK
     a = {r["node_id"]: r["score"] for r in base.scores.collect()}
     b = {r["node_id"]: r["score"] for r in ser.scores.collect()}
     assert a == b  # same partitioning, same plan: bit-identical
-
-    from pyspark.storagelevel import StorageLevel
 
     assert ss.state_storage_level(None) is None
     assert ss.state_storage_level(10_000) is None
@@ -125,7 +128,6 @@ def test_label_propagation_invariant_under_salting(spark):
     # LPA's vote gather joins on DST, so the hot node must be a hot
     # in-degree hub: reverse the skewed graph (node 0 in-degree 201).
     from graph_data_science_spark.algorithms.labelprop import label_propagation
-    from graph_data_science_spark.pregel.spmv import detect_hot_sources
 
     fwd = _skewed_graph(spark)
     rev = LinkGraph(
@@ -175,3 +177,47 @@ def test_user_pregel_invariant_under_salting(spark):
     assert set(a) == set(b)
     for nd in a:
         assert b[nd] == pytest.approx(a[nd], abs=1e-12)
+
+
+def test_delta_stepping_invariant_under_salting(spark):
+    # Min-relaxation gather (paths.py): hub 0's out-edges are salted, the
+    # per-destination min recombines exactly across salt groups.
+    from graph_data_science_spark.algorithms.paths import delta_stepping
+
+    hub = [(0, i, 1.0 + i % 5) for i in range(1, 201)]
+    ring = [(i, (i + 1) % 201, 0.5) for i in range(201)]
+    g = LinkGraph(edges=spark.createDataFrame(hub + ring, "src long, dst long, weight double"))
+    plain = delta_stepping(g, source=0, delta=1.0)
+    salted = delta_stepping(g, source=0, delta=1.0, hot_degree_threshold=50)
+    a = {r["node_id"]: r["distance"] for r in plain.distances.collect()}
+    b = {r["node_id"]: r["distance"] for r in salted.distances.collect()}
+    assert len(a) == 201
+    assert a == b
+    assert plain.did_converge and salted.did_converge
+    assert plain.ran_iterations == salted.ran_iterations
+
+
+def test_dag_longest_path_invariant_under_salting(spark):
+    # Max-relaxation gather (dag.py) over a three-layer DAG whose root 0
+    # fans out to 200 nodes; longest paths AND their parents must match.
+    from graph_data_science_spark.algorithms.dag import dag_longest_path
+
+    fan = [(0, i, float(1 + i % 7)) for i in range(1, 201)]
+    mid = [(i, 201 + i % 10, float(1 + (13 * i) % 11)) for i in range(1, 201)]
+    sink = [(201 + j, 211, float(j + 1)) for j in range(10)]
+    g = LinkGraph(
+        edges=spark.createDataFrame(fan + mid + sink, "src long, dst long, weight double")
+    )
+    assert detect_hot_sources(g.edges, 50) is not None
+    plain = dag_longest_path(g)
+    salted = dag_longest_path(g, hot_degree_threshold=50)
+
+    def paths(res):
+        return {r["target_node"]: (r["total_cost"], r["node_ids"]) for r in res.paths.collect()}
+
+    a, b = paths(plain), paths(salted)
+    assert len(a) == 212
+    assert a == b
+    assert a[211][0] == max(
+        (1 + i % 7) + (1 + (13 * i) % 11) + (1 + i % 10) for i in range(1, 201)
+    )
