@@ -131,14 +131,7 @@ def _run_pagerank(spark, edges_path: str, node_count: int, max_iterations: int, 
     edges = spark.read.parquet(edges_path)
     g = LinkGraph(edges=edges, node_count=node_count)
     t0 = time.monotonic()
-    # fuse=N runs N message rounds per Spark job (score-exact; see
-    # pagerank.fuse). A/B at 20M-edge bench scale: fusion is a clear LOSS
-    # (34.3 vs 12.3 s/round at local[32]) — the fused union's branches
-    # chain on each other and Spark recomputes the shared prefix per
-    # branch. Default stays 1; the knob only pays on graphs small enough
-    # that per-round plans cost less than job-launch overhead.
-    fuse = int(os.environ.get("SPARK_GRAFT_FUSE", "1"))
-    res = pagerank(g, damping=0.85, tolerance=tolerance, max_iterations=max_iterations, fuse=fuse)
+    res = pagerank(g, damping=0.85, tolerance=tolerance, max_iterations=max_iterations)
     res.scores.agg(F.sum("score")).collect()  # materialize fully
     wall = time.monotonic() - t0
     return res, wall
@@ -196,10 +189,7 @@ def scaling_run(cpus: int, n_conv: int, out_json: str) -> None:
     load_before = _loadavg()
     jiff_before = _cpu_jiffies()
     fields_before = _cpu_fields()
-    fuse = int(os.environ.get("SPARK_GRAFT_FUSE", "1"))
-    res = pagerank(
-        g, tolerance=0.0, max_iterations=SCALING_WARMUP + SCALING_MEASURED + 1, fuse=fuse
-    )
+    res = pagerank(g, tolerance=0.0, max_iterations=SCALING_WARMUP + SCALING_MEASURED + 1)
     jiff_after = _cpu_jiffies()
     fields_after = _cpu_fields()
     measured = res.superstep_walls[SCALING_WARMUP:]

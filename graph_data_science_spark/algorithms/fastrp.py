@@ -173,6 +173,10 @@ def fastrp(
     prop_dim = (
         int(property_dimension) if property_dimension is not None else int(d * float(property_ratio))
     )
+    if not (0 <= prop_dim <= d):
+        # The property segment is carved out of the d output columns; a
+        # wider one would leave a negative random segment.
+        raise ValueError(f"propertyDimension must be in [0, embeddingDimension={d}], got {prop_dim}")
     if prop_dim > 0 and feature_properties is None:
         raise ValueError("When `propertyRatio` is non-zero, `featureProperties` may not be empty.")
     if feature_properties is None:

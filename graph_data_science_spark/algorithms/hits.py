@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph.build import LinkGraph
 from graph_data_science_spark.pregel.spmv import sql_message_path
-from graph_data_science_spark.pregel.superstep import SuperstepLoop, edge_lineage
+from graph_data_science_spark.pregel.superstep import SuperstepLoop
 
 
 @dataclass
@@ -64,11 +64,8 @@ def hits(
         spark,
         "hits",
         checkpoint_dir,
-        lineage=edge_lineage(
-            graph.edges,
-            params={"algo": "hits"},
-            content_sample=checkpoint_dir is not None,
-        ),
+        edges=graph.edges,
+        params={"algo": "hits"},
     )
 
     nodes = graph.node_ids().select(F.col("node_id").alias("node"))

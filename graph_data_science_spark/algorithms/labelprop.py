@@ -51,7 +51,6 @@ from graph_data_science_spark.graph.build import LinkGraph
 from graph_data_science_spark.pregel.spmv import salt_hot_keys, salted_gather_join
 from graph_data_science_spark.pregel.superstep import (
     SuperstepLoop,
-    edge_lineage,
     materialize_roundtrip,
 )
 
@@ -112,11 +111,8 @@ def label_propagation(
         spark,
         "labelprop",
         checkpoint_dir,
-        lineage=edge_lineage(
-            graph.edges,
-            params={"algo": "labelprop", "seed_col": seed_col, "node_weight_col": node_weight_col},
-            content_sample=checkpoint_dir is not None,
-        ),
+        edges=graph.edges,
+        params={"algo": "labelprop", "seed_col": seed_col, "node_weight_col": node_weight_col},
     )
     labels = loop.commit(_initial_labels(graph, seed_col).select(F.col("node_id").alias("node"), "label"), 0, {})
 
@@ -182,8 +178,11 @@ def _label_propagation_sequential_batched(
     than one chunk's adjacency — the scale cap the driver kernel had is
     gone; the serialism that remains is the SEMANTICS (async in-order
     updates have no order-free formulation; the reference is equally
-    serial at concurrency=1). Exactly equal to the driver kernel by
-    construction (differential-tested)."""
+    serial at concurrency=1). Equal to the driver kernel by construction
+    (differential-tested), up to floating-point summation order: this
+    kernel adds each node's votes in (src, dst)-sorted order, the driver
+    kernel in ``edges.collect()`` adjacency order, so with non-integer
+    weights a near-tie vote can resolve differently."""
     spark = graph.edges.sparkSession
     n = graph.with_node_count()
 

@@ -22,6 +22,11 @@ ArticleRank (``ArticleRankComputation.java``) is the same loop with message
 denominator ``degree + avgDegree``. Eigenvector
 (``EigenvectorComputation.java``) is power iteration with a per-superstep
 global L2 normalization (the masterCompute analog is a driver-side agg).
+
+Each loop hands its edge frame and parameters to ``SuperstepLoop``, which
+owns the input fingerprint (lineage) and the checkpoint layout; the rank
+loop commits exactly one message round per Spark job, and its resume reads
+the committed deltas back through ``SuperstepLoop.committed_states``.
 """
 
 from __future__ import annotations
@@ -35,7 +40,6 @@ from graph_data_science_spark.graph.build import LinkGraph
 from graph_data_science_spark.pregel.spmv import sql_message_path
 from graph_data_science_spark.pregel.superstep import (
     SuperstepLoop,
-    edge_lineage,
     free_checkpointed,
 )
 
@@ -104,7 +108,6 @@ def _rank_loop(
     name: str,
     num_blocks: int | None,
     hot_degree_threshold: int,
-    fuse: int = 1,
     initial_scores: DataFrame | None = None,
 ) -> RankResult:
     """Delta-push rank loop shared by pagerank and article_rank; each
@@ -122,17 +125,14 @@ def _rank_loop(
         spark,
         name,
         checkpoint_dir,
-        lineage=edge_lineage(
-            graph.edges,
-            params={
-                "algo": name,
-                "damping": damping,
-                "tolerance": tolerance,
-                "source_nodes": source_nodes,
-                "warm": initial_scores is not None,
-            },
-            content_sample=checkpoint_dir is not None,
-        ),
+        edges=graph.edges,
+        params={
+            "algo": name,
+            "damping": damping,
+            "tolerance": tolerance,
+            "source_nodes": source_nodes,
+            "warm": initial_scores is not None,
+        },
         auto_free_prev=False,
     )
     # Pre-loop memory prediction (reference DefaultMemoryGuard analog):
@@ -156,7 +156,6 @@ def _rank_loop(
     # cycle graph, local[8]; see BENCH r3 notes).
     alpha = 1.0 - damping
     fold_every = 4
-    spark_ = spark
 
     def _fold(running: DataFrame | None, frames: list[DataFrame]) -> DataFrame:
         parts = ([running] if running is not None else []) + frames
@@ -164,25 +163,16 @@ def _rank_loop(
         for p in parts[1:]:
             out = out.union(p.select("node", "delta"))
         out = out.groupBy("node").agg(F.sum("delta").alias("delta"))
-        if loop.state_level is not None:
-            out = out.localCheckpoint(eager=True, storageLevel=loop.state_level)
-        else:
-            out = out.localCheckpoint(eager=True)
+        out = out.localCheckpoint(eager=True, storageLevel=loop.state_level)
         for p in parts:  # folded frames are no longer needed — free the cache
             free_checkpointed(p)
         return out
 
     resumed = loop.resume()
     if resumed is not None:
-        # Committed state_i frames are per-superstep deltas; refold them.
-        import os as _os
-
+        # Committed states are per-superstep deltas; refold them.
         last = resumed[1]
-        frames = [
-            spark_.read.parquet(loop._state_path(i))
-            for i in range(0, last + 1)
-            if _os.path.exists(loop._marker(i))
-        ]
+        frames = loop.committed_states()
         if initial_scores is not None:
             # Warm-start runs fold the previous solution in as delta_(-1)
             # (see below); committed states are residual deltas only, so
@@ -197,11 +187,6 @@ def _rank_loop(
             )
         running = _fold(None, frames)
         delta = frames[-1]
-        if "_s" in delta.columns:
-            # Fused commits union several rounds; only the last round's
-            # rows are the live active set.
-            last_s = delta.agg(F.max("_s").alias("m")).collect()[0]["m"]
-            delta = delta.filter(F.col("_s") == last_s).select("node", "delta")
         start = last + 1
         pending_init: list[DataFrame] = []  # all committed deltas already folded
     else:
@@ -263,46 +248,26 @@ def _rank_loop(
     it = start - 1
     while it + 1 < max_iterations:
         it_t0 = _time.monotonic()
-        # Fuse up to `fuse` message rounds into ONE Spark job: the
-        # tolerance gate between rounds stays inside the plan (it governs
-        # SENDING, exactly like vote-to-halt — running a round after
-        # convergence is a provable no-op, so late detection can't change
-        # scores), the per-round deltas are committed as one tagged union
-        # (the fold sums rows regardless), and only the last round's rows
-        # feed the next active set. The shared per-round subplan is
-        # deduplicated by Spark's exchange reuse. Cuts the fixed
-        # job-launch/commit overhead per superstep by the fusion factor.
-        rounds = min(fuse, max_iterations - (it + 1))
+        # One message round per Spark job. The tolerance gate governs
+        # SENDING, exactly like vote-to-halt; the active-vertex count for
+        # the convergence check rides the commit job as an Observation.
         cur = delta.filter(F.abs("delta") > tolerance).select("node", "delta")
-        frames = []
-        for r in range(rounds):
-            msgs = msg_fn(cur.select("node", F.col("delta").alias("msg_val")))
-            nd = msgs.select(
-                F.col("dst").alias("node"), (F.lit(damping) * F.col("msg")).alias("delta")
-            )
-            frames.append(nd.select("node", "delta", F.lit(r).alias("_s")))
-            if r + 1 < rounds:
-                cur = nd.filter(F.abs("delta") > tolerance).select("node", "delta")
-        fused = frames[0]
-        for fr in frames[1:]:
-            fused = fused.union(fr)
-        obs = Observation()
-        fused = fused.observe(
-            obs,
-            F.sum(
-                F.when((F.col("_s") == rounds - 1) & (F.abs("delta") > tolerance), 1).otherwise(0)
-            ).alias("active"),
+        msgs = msg_fn(cur.select("node", F.col("delta").alias("msg_val")))
+        nd = msgs.select(
+            F.col("dst").alias("node"), (F.lit(damping) * F.col("msg")).alias("delta")
         )
-        it += rounds
-        committed = loop.commit(fused, it, {}, observation=obs)
-        delta = committed.filter(F.col("_s") == rounds - 1).select("node", "delta")
-        pending.append(committed)
-        updates += rounds
-        wall = _time.monotonic() - it_t0
-        walls.extend([wall / rounds] * rounds)
+        obs = Observation()
+        nd = nd.observe(
+            obs, F.sum(F.when(F.abs("delta") > tolerance, 1).otherwise(0)).alias("active")
+        )
+        it += 1
+        delta = loop.commit(nd, it, {}, observation=obs)
+        pending.append(delta)
+        updates += 1
+        walls.append(_time.monotonic() - it_t0)
         if len(pending) >= fold_every:
             # Keep the newest frame out of the fold: _fold frees what it
-            # sums, and `delta` still derives from it for the next round.
+            # sums, and that frame is `delta`, the next round's input.
             running = _fold(running, pending[:-1])
             pending = [pending[-1]]
         if not (obs.get.get("active") or 0):
@@ -341,7 +306,6 @@ def pagerank(
     checkpoint_dir: str | None = None,
     num_blocks: int | None = None,
     hot_degree_threshold: int = 2_000_000,
-    fuse: int = 1,
     initial_scores: DataFrame | None = None,
 ) -> RankResult:
     """``initial_scores``: optional (node_id, score) frame — warm-start
@@ -349,22 +313,12 @@ def pagerank(
     pushes only the residual vs the supplied scores, so an unchanged
     converged graph costs zero message rounds and a slightly-grown graph
     costs work proportional to the drift. Scores converge to the same
-    fixpoint as a cold run (power iteration is start-independent).
-
-    ``fuse``: number of message rounds executed per Spark job (default
-    1 = classic one-job-per-superstep). Fusion is score-exact (the
-    tolerance gate stays between rounds inside the plan) and trades
-    convergence-detection granularity for fewer job launches. CAVEAT
-    (measured, 20M-edge cycle graph at local[32]): the fused rounds are
-    committed as one union whose branches chain on each other, and Spark
-    re-executes the shared prefix per branch — 34.3 vs 12.3 s/round
-    against unfused. Fuse only when the per-round plan is cheaper than
-    job-launch overhead (small graphs / very fast clusters)."""
+    fixpoint as a cold run (power iteration is start-independent)."""
     norm = _normalized_edges(graph, weighted, num_partitions=num_blocks)
     return _rank_loop(
         graph, norm, damping, tolerance, max_iterations, source_nodes,
         checkpoint_dir, "pagerank", num_blocks, hot_degree_threshold,
-        fuse=fuse, initial_scores=initial_scores,
+        initial_scores=initial_scores,
     )
 
 
@@ -446,16 +400,13 @@ def eigenvector(
         spark,
         "eigenvector",
         checkpoint_dir,
-        lineage=edge_lineage(
-            graph.edges,
-            params={
-                "algo": "eigenvector",
-                "tolerance": tolerance,
-                "weighted": weighted,
-                "source_nodes": source_nodes,
-            },
-            content_sample=checkpoint_dir is not None,
-        ),
+        edges=graph.edges,
+        params={
+            "algo": "eigenvector",
+            "tolerance": tolerance,
+            "weighted": weighted,
+            "source_nodes": source_nodes,
+        },
     )
     loop.predict(node_count=n, state_row_bytes=40)  # (node, y, x_prev)
 

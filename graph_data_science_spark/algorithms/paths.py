@@ -44,7 +44,7 @@ from graph_data_science_spark.pregel.spmv import (
     prep_edges_sql_skew,
     salted_gather_join,
 )
-from graph_data_science_spark.pregel.superstep import SuperstepLoop, edge_lineage
+from graph_data_science_spark.pregel.superstep import SuperstepLoop
 
 
 @dataclass
@@ -83,11 +83,8 @@ def shortest_paths(
         spark,
         "sssp",
         checkpoint_dir,
-        lineage=edge_lineage(
-            graph.edges,
-            params={"algo": "sssp", "source": source, "weighted": weighted},
-            content_sample=checkpoint_dir is not None,
-        ),
+        edges=graph.edges,
+        params={"algo": "sssp", "source": source, "weighted": weighted},
     )
     loop.predict(node_count=n, state_row_bytes=32)  # (node, dist)
     dist = spark.createDataFrame([(int(source), 0.0)], "node long, dist double")
@@ -193,11 +190,8 @@ def delta_stepping(
         spark,
         "delta_stepping",
         checkpoint_dir,
-        lineage=edge_lineage(
-            graph.edges,
-            params={"algo": "delta", "source": source, "delta": delta, "weighted": weighted},
-            content_sample=checkpoint_dir is not None,
-        ),
+        edges=graph.edges,
+        params={"algo": "delta", "source": source, "delta": delta, "weighted": weighted},
     )
     loop.predict(node_count=n, state_row_bytes=33)  # (node, dist, pending)
     resumed = loop.resume()
@@ -348,11 +342,8 @@ def all_shortest_paths(
         spark,
         "asp",
         checkpoint_dir,
-        lineage=edge_lineage(
-            graph.edges,
-            params={"algo": "asp", "weighted": weighted},
-            content_sample=checkpoint_dir is not None,
-        ),
+        edges=graph.edges,
+        params={"algo": "asp", "weighted": weighted},
     )
     n_sources = src_frame.count()
     # State is (source, node, dist) pairs — worst case every source reaches

@@ -33,7 +33,6 @@ from graph_data_science_spark.graph.build import LinkGraph
 from graph_data_science_spark.pregel.spmv import salt_hot_keys, salted_gather_join
 from graph_data_science_spark.pregel.superstep import (
     SuperstepLoop,
-    edge_lineage,
     free_checkpointed,
 )
 
@@ -84,11 +83,8 @@ def wcc(
         spark,
         "wcc",
         checkpoint_dir,
-        lineage=edge_lineage(
-            graph.edges,
-            params={"algo": "wcc", "threshold": threshold, "seeded": seeds is not None},
-            content_sample=checkpoint_dir is not None,
-        ),
+        edges=graph.edges,
+        params={"algo": "wcc", "threshold": threshold, "seeded": seeds is not None},
     )
     resumed = loop.resume()
     if resumed is not None:
@@ -244,11 +240,8 @@ def wcc_star(
         spark,
         "wcc_star",
         checkpoint_dir,
-        lineage=edge_lineage(
-            graph.edges,
-            params={"algo": "wcc_star", "threshold": threshold},
-            content_sample=checkpoint_dir is not None,
-        ),
+        edges=graph.edges,
+        params={"algo": "wcc_star", "threshold": threshold},
         auto_free_prev=False,
     )
     resumed = loop.resume()

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph.build import LinkGraph
 from graph_data_science_spark.pregel.spmv import prep_edges_sql_skew, salted_gather_join
-from graph_data_science_spark.pregel.superstep import SuperstepLoop, edge_lineage
+from graph_data_science_spark.pregel.superstep import SuperstepLoop
 
 _REDUCERS = {"sum": F.sum, "min": F.min, "max": F.max, "count": F.count}
 
@@ -150,11 +150,8 @@ def run_pregel(
         spark,
         computation.name,
         checkpoint_dir,
-        lineage=edge_lineage(
-            graph.edges,
-            params={"algo": f"pregel:{computation.name}", "reducer": computation.reducer},
-            content_sample=checkpoint_dir is not None,
-        ),
+        edges=graph.edges,
+        params={"algo": f"pregel:{computation.name}", "reducer": computation.reducer},
     )
     loop.predict(node_count=n, edge_count=graph.relationship_count())
 

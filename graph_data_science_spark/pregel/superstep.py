@@ -21,6 +21,12 @@ novel requirement of the north rule:
 
 In-memory mode (``checkpoint_dir=None``) uses ``localCheckpoint`` — same
 lineage truncation, no durability — for tests and tight benchmark loops.
+
+The loop owns the whole checkpoint contract: it fingerprints its own input
+(callers pass the edge frame and their parameters, never a lineage string),
+and the ``state_NNNNN/_COMMITTED`` layout stays private to this module —
+algorithms read committed state only through :meth:`SuperstepLoop.resume`
+and :meth:`SuperstepLoop.committed_states`.
 """
 
 from __future__ import annotations
@@ -99,10 +105,17 @@ class SuperstepLoop:
         spark: SparkSession,
         name: str,
         checkpoint_dir: str | None = None,
-        lineage: str = "",
+        *,
+        edges: DataFrame,
+        params: dict | None = None,
         auto_free_prev: bool = True,
     ) -> None:
-        """``auto_free_prev``: in memory mode, release the previous
+        """``edges`` / ``params``: the input edge table and the algorithm's
+        configuration; the loop fingerprints both into ``self.lineage``
+        (see :func:`_edge_lineage`), which every commit records and
+        ``resume`` checks.
+
+        ``auto_free_prev``: in memory mode, release the previous
         superstep's localCheckpointed state when the next one commits
         (safe when the algorithm only ever reads the latest state — WCC,
         LPA, eigenvector). Algorithms that retain older committed frames
@@ -111,7 +124,7 @@ class SuperstepLoop:
         self.spark = spark
         self.name = name
         self.dir = os.path.join(checkpoint_dir, name) if checkpoint_dir else None
-        self.lineage = lineage
+        self.lineage = _edge_lineage(edges, params, durable=self.dir is not None)
         self.auto_free_prev = auto_free_prev
         self._prev_cached: DataFrame | None = None
         self.memory_metrics: list[dict] = []
@@ -187,15 +200,19 @@ class SuperstepLoop:
         return os.path.join(self.dir, "metrics")
 
     # -- resume ----------------------------------------------------------
-    def last_committed(self) -> int | None:
+    def _committed(self) -> list[int]:
+        """Committed supersteps, ascending."""
         if not self.dir or not os.path.isdir(self.dir):
-            return None
-        done = [
+            return []
+        return sorted(
             int(d.split("_")[1])
             for d in os.listdir(self.dir)
             if d.startswith("state_") and os.path.exists(self._marker(int(d.split("_")[1])))
-        ]
-        return max(done) if done else None
+        )
+
+    def last_committed(self) -> int | None:
+        done = self._committed()
+        return done[-1] if done else None
 
     def resume(self) -> tuple[DataFrame, int] | None:
         """(state, superstep) of the last committed superstep, or None.
@@ -223,6 +240,12 @@ class SuperstepLoop:
                 "matching input to resume"
             )
         return self.spark.read.parquet(self._state_path(last)), last
+
+    def committed_states(self) -> list[DataFrame]:
+        """Every committed superstep's state, in superstep order — for loops
+        whose committed state is a per-superstep delta that resume refolds
+        (pagerank). Call after :meth:`resume`, which checks the lineage."""
+        return [self.spark.read.parquet(self._state_path(i)) for i in self._committed()]
 
     # -- commit ----------------------------------------------------------
     def commit(
@@ -262,10 +285,7 @@ class SuperstepLoop:
                 state.write.mode("overwrite").parquet(path)
                 out = self.spark.read.parquet(path)
             else:
-                if self.state_level is not None:
-                    out = state.localCheckpoint(eager=True, storageLevel=self.state_level)
-                else:
-                    out = state.localCheckpoint(eager=True)
+                out = state.localCheckpoint(eager=True, storageLevel=self.state_level)
                 if self.auto_free_prev and self._prev_cached is not None:
                     free_checkpointed(self._prev_cached)
                 self._prev_cached = out
@@ -560,21 +580,19 @@ def materialize_roundtrip(df: DataFrame, tag: str = "state", keep_last: int | No
     return out
 
 
-def edge_lineage(
-    edges: DataFrame, params: dict | None = None, content_sample: bool = False
-) -> str:
+def _edge_lineage(edges: DataFrame, params: dict | None, durable: bool) -> str:
     """Stable fingerprint of the input edge table for lineage rows.
 
     File-backed inputs fingerprint by file list; ``params`` folds the
     algorithm's configuration into the string so a checkpoint taken with
     different parameters over the same files is rejected on resume.
-    ``content_sample=True`` (durable-checkpoint callers) additionally hashes
-    the edge content for inline/derived frames — otherwise any in-memory
-    frame reads as the constant ``"inline"`` and a stale checkpoint from a
-    *different* inline graph would be silently adopted. The content hash is
-    one full-scan aggregate; callers only request it when a checkpoint_dir
-    is actually in play (durable mode already writes parquet per superstep,
-    so one extra scan is noise there).
+    ``durable`` (a checkpoint_dir is in play) additionally hashes the edge
+    content of inline/derived frames — otherwise any in-memory frame reads
+    as the constant ``"inline"`` and a stale checkpoint from a *different*
+    inline graph would be silently adopted. The content hash is one
+    full-scan aggregate; in-memory loops never resume, so they skip it
+    (durable mode already writes parquet per superstep, so one extra scan
+    is noise there).
     """
     try:
         files = edges.inputFiles()
@@ -582,7 +600,7 @@ def edge_lineage(
         files = []
     if files:
         base = json.dumps(sorted(files)[:64])
-    elif content_sample:
+    elif durable:
         try:
             # bit_xor, not sum: order-insensitive AND overflow-free under
             # ANSI mode (summing ±2^63 hashes overflows long).

@@ -62,20 +62,26 @@ def test_committed_markers_and_metrics(spark, tmp_path):
 
 def test_resume_rejects_stale_lineage(spark, tmp_path):
     # A checkpoint dir committed for one graph must not be silently adopted
-    # by a run over a different graph.
+    # by a run over a different graph. Both graphs are inline frames with
+    # the same params, so only the durable content hash tells them apart.
     import pytest
 
     from graph_data_science_spark.pregel.superstep import SuperstepLoop
 
     ck = str(tmp_path / "ck_stale")
-    loop_a = SuperstepLoop(spark, "algo", ck, lineage="graph-A")
+    params = {"algo": "algo"}
+    schema = "src long, dst long, weight double"
+    edges_a = spark.createDataFrame([(0, 1, 1.0), (1, 2, 1.0)], schema)
+    edges_b = spark.createDataFrame([(0, 1, 1.0), (1, 3, 1.0)], schema)
+    loop_a = SuperstepLoop(spark, "algo", ck, edges=edges_a, params=params)
+    assert loop_a.lineage.startswith("inline:h=")
     st = spark.createDataFrame([(0, 1.0)], "node long, delta double")
     loop_a.commit(st, 0, {})
-    loop_b = SuperstepLoop(spark, "algo", ck, lineage="graph-B")
+    loop_b = SuperstepLoop(spark, "algo", ck, edges=edges_b, params=params)
     with pytest.raises(ValueError, match="different input"):
         loop_b.resume()
     # Matching lineage still resumes.
-    state, step = SuperstepLoop(spark, "algo", ck, lineage="graph-A").resume()
+    state, step = SuperstepLoop(spark, "algo", ck, edges=edges_a, params=params).resume()
     assert step == 0 and state.count() == 1
 
 

@@ -92,6 +92,12 @@ def test_fastrp_property_validation(spark):
     with pytest.raises(ValueError, match="propertyRatio"):
         fastrp(g, property_ratio=1.5,
                feature_properties=_feats(spark, [(0, 1.0, [1.0])]))
+    # An explicit propertyDimension must fit inside embeddingDimension:
+    # wider would drop the random segment and shrink the output width.
+    fp = _feats(spark, [(i, 1.0, [1.0]) for i in range(5)])
+    for bad in (9, -1):
+        with pytest.raises(ValueError, match="propertyDimension"):
+            fastrp(g, embedding_dimension=8, property_dimension=bad, feature_properties=fp)
 
 
 def test_fastrp_missing_feature_row_fails(spark):

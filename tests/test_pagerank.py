@@ -101,26 +101,3 @@ def test_pagerank_tolerance_converges_early(spark):
     res_tight = pagerank(g, tolerance=0.1, max_iterations=40)
     assert res_tight.did_converge
     assert res_loose.ran_iterations < res_tight.ran_iterations
-
-
-def test_pagerank_fused_scores_identical(spark):
-    # fuse=k runs k message rounds per Spark job; scores must be exact
-    # matches of the unfused loop (the tolerance gate stays in-plan).
-    g = from_edge_list(spark, F1_EDGES, node_count=11)
-    base = scores_list(pagerank(g, tolerance=1e-6, max_iterations=41), 11)
-    for k in (2, 3, 5):
-        fused = scores_list(pagerank(g, tolerance=1e-6, max_iterations=41, fuse=k), 11)
-        for a, b in zip(base, fused):
-            assert a == pytest.approx(b, abs=1e-12), f"fuse={k}"
-
-
-def test_pagerank_fused_resume(spark, tmp_path):
-    ck = str(tmp_path / "ckf")
-    g = from_edge_list(spark, F1_EDGES, node_count=11)
-    partial = pagerank(g, tolerance=1e-6, max_iterations=5, checkpoint_dir=ck, fuse=3)
-    resumed = pagerank(g, tolerance=1e-6, max_iterations=41, checkpoint_dir=ck, fuse=3)
-    full = pagerank(g, tolerance=1e-6, max_iterations=41)
-    a = scores_list(resumed, 11)
-    b = scores_list(full, 11)
-    for x, y in zip(a, b):
-        assert x == pytest.approx(y, abs=1e-9)
