@@ -9,7 +9,7 @@ transforms:
                    ``IdMap`` analog, SURVEY.md §1.5).
 - ``pregel``     — the superstep machine: CSR-block SpMV pandas-UDF kernels,
                    shuffle-aggregated messages, vote-to-halt convergence,
-                   checkpoint/resume with per-partition lineage + metrics
+                   checkpoint/resume with per-data-file lineage + metrics
                    (GDS ``pregel/`` analog, SURVEY.md §2.C).
 - ``algorithms`` — PageRank / ArticleRank / Eigenvector, WCC, Label
                    Propagation, Triangle Count + LCC, Degree Centrality,

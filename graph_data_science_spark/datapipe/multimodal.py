@@ -366,8 +366,11 @@ def _av_frames_fn(tw: int, th: int):
                     ok, px = False, np.zeros(tw * th, dtype=np.float32)
                     if container is not None:
                         try:
+                            # With stream=, PyAV takes the offset in
+                            # stream.time_base units, not microseconds.
                             container.seek(
-                                int(ts * 1000), backward=True, any_frame=False, stream=stream
+                                int((ts / 1000.0) / stream.time_base),
+                                backward=True, any_frame=False, stream=stream,
                             )
                             frame = next(container.decode(stream))
                             im = frame.to_image().convert("L").resize(

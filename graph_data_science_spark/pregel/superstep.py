@@ -1,4 +1,4 @@
-"""Superstep loop with durable checkpoint / resume / per-partition metrics.
+"""Superstep loop with durable checkpoint / resume / per-data-file metrics.
 
 GDS's ``Pregel.run()`` loop (reference ``pregel/.../Pregel.java:204-242``)
 has convergence detection and cancellation but **no** checkpoint/restart —
@@ -9,11 +9,16 @@ novel requirement of the north rule:
   checkpoint store (parquet here; on a cluster the same layout maps 1:1 to
   an Iceberg table partitioned by ``superstep`` — each commit below is one
   snapshot append; no Iceberg runtime jar ships in this sandbox).
-- A ``metrics`` table receives one row **per physical partition** of the
-  committed state (superstep, partition, rows, wall_ms, lineage fingerprint
-  of the input edge table, plus algorithm counters) — the durable analog of
-  GDS's hierarchical progress tasks
+- A ``metrics`` table receives one row **per committed data file** of the
+  state (superstep, partition = data-file index, rows from the file's
+  parquet footer, wall_ms, lineage fingerprint of the input edge table,
+  plus algorithm counters) — the Iceberg data-file analog and the durable
+  analog of GDS's hierarchical progress tasks
   (``progress-tracking/.../tasks/Task.java``), queryable while the job runs.
+  The driver writes each commit's rows as one parquet file
+  (``metrics/part-<superstep>-<uuid>.parquet``, renamed into place from a
+  hidden temp name), so a durable commit runs exactly one Spark job of its
+  own: the state write.
 - A ``_COMMITTED`` marker makes the superstep atomic: resume scans for the
   highest committed superstep and reloads that state; everything after is
   recomputed. Writing state each superstep also truncates plan lineage, so
@@ -35,7 +40,10 @@ import json
 import logging
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,6 +52,16 @@ logger = logging.getLogger(__name__)
 METRICS_SCHEMA = (
     "algo string, superstep int, partition int, rows long, wall_ms double, "
     "lineage string, counters string"
+)
+
+# The same columns as Arrow types, for the driver-side metrics write; the
+# Spark reader maps them back to METRICS_SCHEMA's types.
+_ARROW_TYPES = {"string": pa.string(), "int": pa.int32(), "long": pa.int64(), "double": pa.float64()}
+_METRICS_ARROW_SCHEMA = pa.schema(
+    [
+        (name, _ARROW_TYPES[typ])
+        for name, typ in (col.split() for col in METRICS_SCHEMA.split(","))
+    ]
 )
 
 # Vertex-state frames above this row count are localCheckpoint-ed
@@ -257,9 +275,12 @@ class SuperstepLoop:
     ) -> DataFrame:
         """Persist state for this superstep; return the re-rooted DataFrame.
 
-        Durable mode writes parquet + per-partition metrics + marker.
-        Memory mode localCheckpoints (lineage truncation) and keeps metrics
-        in-process. Either way the returned DataFrame has flat lineage.
+        Durable mode writes the state as parquet — the one Spark job of a
+        durable commit — then, on the driver with no Spark job, one metrics
+        row per committed data file (row counts from the parquet footers)
+        and the ``_COMMITTED`` marker. Memory mode localCheckpoints (lineage
+        truncation) and keeps one metrics row in-process. Either way the
+        returned DataFrame has flat lineage.
 
         ``observation``: a pyspark Observation whose metrics were attached to
         ``state`` via ``df.observe`` — its values (e.g. active-vertex count)
@@ -283,7 +304,9 @@ class SuperstepLoop:
             if durable:
                 path = self._state_path(superstep)
                 state.write.mode("overwrite").parquet(path)
-                out = self.spark.read.parquet(path)
+                # The schema is known: pinning it skips the schema-inference
+                # job of a plain spark.read.parquet.
+                out = self.spark.read.schema(state.schema).parquet(path)
             else:
                 out = state.localCheckpoint(eager=True, storageLevel=self.state_level)
                 if self.auto_free_prev and self._prev_cached is not None:
@@ -299,68 +322,68 @@ class SuperstepLoop:
         if self._prediction:
             counters = {**self._prediction, **(counters or {})}
 
-        # Per-partition lineage/metrics rows are the durable observability
-        # contract; in memory mode we skip the extra scan and record one row.
+        # One metrics row per committed data file is the durable
+        # observability contract; in memory mode there are no files and we
+        # record one row.
+        file_rows: list[int] = []
         if durable:
-            part_rows = (
-                out.groupBy(F.spark_partition_id().alias("partition"))
-                .agg(F.count("*").alias("rows"))
-                .collect()
-            )
-            # Estimate-vs-actual feedback (r4 verdict item 9): record what
-            # the predict() model can be checked against — the committed
-            # state's row count and its on-disk parquet bytes. The
+            # Row counts come from the parquet footers of the committed data
+            # files (same name filter as the byte count), so they cost no
+            # Spark job. Estimate-vs-actual feedback (r4 verdict item 9):
+            # record what the predict() model can be checked against — the
+            # committed state's row count and its on-disk parquet bytes. The
             # prediction is an IN-MEMORY upper bound; parquet is
             # columnar-compressed, so estimate_report() compares with a
             # documented factor rather than equality.
             obs_bytes = 0
-            for root, _dirs, files in os.walk(self._state_path(superstep)):
-                for fn in files:
-                    if not fn.startswith(("_", ".")):
-                        obs_bytes += os.path.getsize(os.path.join(root, fn))
+            for fn in sorted(os.listdir(path)):
+                if fn.startswith(("_", ".")):
+                    continue
+                f = os.path.join(path, fn)
+                file_rows.append(pq.read_metadata(f).num_rows)
+                obs_bytes += os.path.getsize(f)
             counters = {
                 **(counters or {}),
-                "observed_state_rows": sum(int(r["rows"]) for r in part_rows),
+                "observed_state_rows": sum(file_rows),
                 "observed_state_parquet_mb": round(obs_bytes / 1e6, 3),
             }
-        else:
-            part_rows = []
         counters_json = json.dumps(counters or {}, sort_keys=True)
+        parts = list(enumerate(file_rows)) or [(-1, 0)]
         rows = [
             {
                 "algo": self.name,
                 "superstep": superstep,
-                "partition": int(r["partition"]),
-                "rows": int(r["rows"]),
+                "partition": part,
+                "rows": n,
                 "wall_ms": wall_ms,
                 "lineage": self.lineage,
                 "counters": counters_json,
             }
-            for r in part_rows
-        ] or [
-            {
-                "algo": self.name,
-                "superstep": superstep,
-                "partition": -1,
-                "rows": 0,
-                "wall_ms": wall_ms,
-                "lineage": self.lineage,
-                "counters": counters_json,
-            }
+            for part, n in parts
         ]
         if durable:
-            self.spark.createDataFrame(rows, METRICS_SCHEMA).coalesce(1).write.mode("append").parquet(
-                self._metrics_path()
-            )
+            self._append_metrics(rows, superstep)
             with open(self._marker(superstep), "w") as fh:
                 fh.write(json.dumps({"superstep": superstep, "lineage": self.lineage}))
         else:
             self.memory_metrics.extend(rows)
         return out
 
+    def _append_metrics(self, rows: list[dict], superstep: int) -> None:
+        """Append one commit's metrics rows as one parquet file, written on
+        the driver. The file is written under a hidden name and renamed into
+        place, so readers (which skip ``.``-prefixed names) never see a
+        partial file."""
+        mdir = self._metrics_path()
+        os.makedirs(mdir, exist_ok=True)
+        name = f"part-{superstep:05d}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(mdir, "." + name)
+        pq.write_table(pa.Table.from_pylist(rows, schema=_METRICS_ARROW_SCHEMA), tmp)
+        os.replace(tmp, os.path.join(mdir, name))
+
     def metrics(self) -> DataFrame:
         if self.dir and os.path.isdir(self._metrics_path()):
-            return self.spark.read.parquet(self._metrics_path())
+            return self.spark.read.schema(METRICS_SCHEMA).parquet(self._metrics_path())
         return self.spark.createDataFrame(self.memory_metrics or [], METRICS_SCHEMA)
 
 
@@ -379,7 +402,7 @@ def estimate_report(metrics_df: DataFrame) -> list[dict]:
     (one dict per algo): the post-run feedback for the ``predict()``
     model. Requires durable (checkpoint_dir) metrics — the observed state
     sizes are recorded at commit time. Metrics tables are tiny (one row
-    per partition per superstep), so the driver-side fold is fine."""
+    per data file per superstep), so the driver-side fold is fine."""
     per_algo: dict[str, dict] = {}
     for r in metrics_df.select("algo", "superstep", "counters").distinct().collect():
         c = json.loads(r["counters"] or "{}")
@@ -575,7 +598,7 @@ def materialize_roundtrip(df: DataFrame, tag: str = "state", keep_last: int | No
         same_tag = [s for s, e in _ROUNDTRIP_ENTRIES.items() if e[0] == tag]
         for seq in sorted(same_tag)[:-keep_last]:
             _free_roundtrip_entry(seq)
-    out = df.sparkSession.read.parquet(path)
+    out = df.sparkSession.read.schema(df.schema).parquet(path)
     out._roundtrip_path = path
     return out
 

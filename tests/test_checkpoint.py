@@ -1,5 +1,6 @@
 """Checkpoint/resume kill-test (SURVEY.md §7.1 M2; north rule: a killed job
-resumes from the last completed superstep with per-partition lineage+metrics)."""
+resumes from the last completed superstep with lineage+metrics rows, one per
+committed data file)."""
 
 import json
 import os
@@ -163,3 +164,58 @@ def test_estimate_report_within_documented_factor(spark, tmp_path):
     assert r["peak_observed_state_parquet_mb"] > 0
     assert ESTIMATE_RATIO_MIN <= r["state_mb_ratio"] <= ESTIMATE_RATIO_MAX
     assert r["within_documented_factor"] is True
+
+
+def test_metrics_table_reads_spark_written_files(spark, tmp_path):
+    """A checkpoint dir whose metrics table already holds a Spark-written
+    file (the layout of commits made before the driver-side metrics write)
+    plus a leftover hidden temp file: new commits append beside them, the
+    table reads back with METRICS_SCHEMA's types, the temp file is ignored,
+    and resume starts from the last committed superstep."""
+    from graph_data_science_spark.pregel.superstep import (
+        METRICS_SCHEMA,
+        SuperstepLoop,
+        estimate_report,
+    )
+
+    ck = str(tmp_path / "ck_compat")
+    edges = spark.createDataFrame([(0, 1, 1.0), (1, 2, 1.0)], "src long, dst long, weight double")
+    n = 40
+    loop = SuperstepLoop(spark, "algo", ck, edges=edges, params={})
+
+    # Superstep 0 as an earlier commit wrote it: state parquet, metrics rows
+    # appended through a Spark job (part-*.snappy.parquet), then the marker.
+    st0 = spark.range(n).selectExpr("id as node", "0.0 as delta")
+    st0.write.parquet(os.path.join(ck, "algo", "state_00000"))
+    counters = json.dumps({"observed_state_rows": n, "observed_state_parquet_mb": 0.001}, sort_keys=True)
+    old_rows = [("algo", 0, p, n // 4, 1.0, loop.lineage, counters) for p in range(4)]
+    metrics_dir = os.path.join(ck, "algo", "metrics")
+    spark.createDataFrame(old_rows, METRICS_SCHEMA).coalesce(1).write.mode("append").parquet(metrics_dir)
+    assert any(f.startswith("part-") and f.endswith(".snappy.parquet") for f in os.listdir(metrics_dir))
+    with open(os.path.join(ck, "algo", "state_00000", "_COMMITTED"), "w") as fh:
+        fh.write(json.dumps({"superstep": 0, "lineage": loop.lineage}))
+    # A metrics write cut off before its rename leaves a hidden partial file.
+    with open(os.path.join(metrics_dir, ".part-00001-0123456789abcdef.parquet"), "wb") as fh:
+        fh.write(b"PAR1 partial")
+
+    state, step = loop.resume()
+    assert step == 0
+    for i in (1, 2):
+        state = loop.commit(state.where(f"node % {i + 1} = 0"), i, {})
+    marker = os.path.join(ck, "algo", "state_00002", "_COMMITTED")
+    with open(marker) as fh:
+        assert fh.read() == json.dumps({"superstep": 2, "lineage": loop.lineage})
+
+    m = loop.metrics()
+    assert m.dtypes == [
+        ("algo", "string"), ("superstep", "int"), ("partition", "int"), ("rows", "bigint"),
+        ("wall_ms", "double"), ("lineage", "string"), ("counters", "string"),
+    ]
+    per_step = {r["superstep"]: r["n"] for r in m.groupBy("superstep").agg(F.sum("rows").alias("n")).collect()}
+    assert per_step == {0: n, 1: n // 2, 2: n // 6 + 1}
+    rep = estimate_report(m)
+    assert len(rep) == 1 and rep[0]["peak_observed_state_rows"] == n
+    assert rep[0]["supersteps_observed"] == 3
+
+    state, step = SuperstepLoop(spark, "algo", ck, edges=edges, params={}).resume()
+    assert step == 2 and state.count() == n // 6 + 1

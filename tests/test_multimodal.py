@@ -163,6 +163,61 @@ def test_av_codec_real_roundtrip(spark):
     assert np.mean([v for r in got[1] for v in r["pixels"]]) > 0.8
 
 
+def test_av_kernel_seeks_in_stream_time_base(monkeypatch):
+    """The PyAV kernel seeks with ``stream=``, so the offset must be in
+    ``stream.time_base`` units, not microseconds. Driver-side: fake ``av``
+    (and ``PIL``) modules, the kernel called on one pandas batch."""
+    import sys
+    import types
+    from fractions import Fraction
+
+    import numpy as np
+    import pandas as pd
+
+    from graph_data_science_spark.datapipe.multimodal import _av_frames_fn
+
+    seeks = []
+
+    class Image:
+        def convert(self, mode):
+            return self
+
+        def resize(self, size, resample):
+            return np.zeros(size[::-1], dtype=np.uint8)
+
+    class Frame:
+        def to_image(self):
+            return Image()
+
+    class Container:
+        def __init__(self):
+            stream = types.SimpleNamespace(time_base=Fraction(1, 12800))
+            self.streams = types.SimpleNamespace(video=[stream])
+
+        def seek(self, offset, backward, any_frame, stream):
+            seeks.append((offset, stream.time_base))
+
+        def decode(self, stream):
+            return iter([Frame()])
+
+        def close(self):
+            pass
+
+    fake_av = types.ModuleType("av")
+    fake_av.open = lambda buf: Container()
+    fake_pil = types.ModuleType("PIL")
+    fake_pil.Image = types.SimpleNamespace(NEAREST=0)
+    monkeypatch.setitem(sys.modules, "av", fake_av)
+    monkeypatch.setitem(sys.modules, "PIL", fake_pil)
+
+    batch = pd.DataFrame(
+        {"asset_id": [7, 7, 7], "payload": [b"x"] * 3, "frame_ts_ms": [0, 1000, 2500]}
+    )
+    out = pd.concat(list(_av_frames_fn(4, 4)(iter([batch]))))
+    assert out["decode_ok"].tolist() == [True, True, True]
+    assert [o for o, _ in seeks] == [0, 12800, 32000]
+
+
 def test_imageio_codec_real_roundtrip(spark):
     """Multi-frame GIF through the imageio frame path (skipped where
     imageio is unavailable)."""
