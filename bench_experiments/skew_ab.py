@@ -3,7 +3,7 @@
 Question: when a handful of mega-hub sources dominate the edge table (the
 transcript-link-graph shape: a tool entity linked from millions of turns),
 does salting their out-edges across ``ceil(degree/threshold)`` sub-partitions
-(`spmv.py:salt_hot_keys`) flatten the per-superstep straggler and
+(`spmv.py:cache_edges`) flatten the per-superstep straggler and
 improve wall time — and what does it cost on build?
 
 Graph: constant-work ring of n_nodes (every node one out-edge) plus

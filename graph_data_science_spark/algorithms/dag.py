@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph.build import LinkGraph
-from graph_data_science_spark.pregel.spmv import prep_edges_sql_skew, salted_gather_join
+from graph_data_science_spark.pregel.spmv import cache_edges, salted_gather_join
 from graph_data_science_spark.pregel.superstep import (
     materialize_roundtrip,
     roundtrip_mark,
@@ -50,8 +50,8 @@ def dag_longest_path(
     spark = graph.edges.sparkSession
     n = graph.with_node_count()
     e = graph.edges if weighted else graph.edges.select("src", "dst", F.lit(1.0).alias("weight"))
-    prepped, _hot = prep_edges_sql_skew(
-        e.select("src", "dst", F.col("weight").alias("norm_w")), None, hot_degree_threshold
+    prepped, _hot = cache_edges(
+        e.select("src", "dst", F.col("weight").cast("double").alias("norm_w")), hot_degree_threshold
     )
     mark = roundtrip_mark()
 

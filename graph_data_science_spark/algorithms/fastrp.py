@@ -144,7 +144,6 @@ def fastrp(
     node_self_influence: float = 0.0,
     weighted: bool = False,
     random_seed: int = 42,
-    num_blocks: int | None = None,
     rng: str = "xxhash",
     feature_properties: DataFrame | None = None,
     feature_columns: list[str] | None = None,
@@ -197,7 +196,7 @@ def fastrp(
             (F.col("weight") / F.col("deg")).alias("norm_w"),
         )
     )
-    blocked = build_blocks(rev, n, num_blocks=num_blocks)
+    blocked = build_blocks(rev, n)
 
     # Sparse random init vectors, scaled by deg^normalizationStrength.
     nodes = graph.node_ids().select(F.col("node_id").alias("node"))

@@ -43,7 +43,6 @@ def hits(
     graph: LinkGraph,
     hits_iterations: int = 20,
     checkpoint_dir: str | None = None,
-    num_blocks: int | None = None,
     hot_degree_threshold: int = 2_000_000,
 ) -> HitsResult:
     spark = graph.edges.sparkSession
@@ -51,14 +50,13 @@ def hits(
     # in-degree is the forward pass's straggler, its out-degree the
     # reverse pass's (see spmv.sql_message_path).
     fwd, fwd_msg = sql_message_path(
-        graph.edges.select("src", "dst", F.lit(1.0).alias("norm_w")),
-        num_blocks, hot_degree_threshold, clustered=False,
+        graph.edges.select("src", "dst", F.lit(1.0).alias("norm_w")), hot_degree_threshold
     )
     rev, rev_msg = sql_message_path(
         graph.edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), F.lit(1.0).alias("norm_w")
         ),
-        num_blocks, hot_degree_threshold, clustered=False,
+        hot_degree_threshold,
     )
     loop = SuperstepLoop(
         spark,

@@ -258,7 +258,7 @@ def silhouette(
     community_col: str = "community",
     exact_node_limit: int = 50_000,
 ) -> SilhouetteResult:
-    """Exact silhouette over a clustered vector frame (reference
+    """Exact silhouette over a cluster-labelled vector frame (reference
     ``algo/.../kmeans/SilhouetteTask.java:30``, the ``computeSilhouette``
     option of KMeans). Per node i in cluster c:
 

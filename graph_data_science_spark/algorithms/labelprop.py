@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph.build import LinkGraph
-from graph_data_science_spark.pregel.spmv import salt_hot_keys, salted_gather_join
+from graph_data_science_spark.pregel.spmv import cache_edges, salted_gather_join
 from graph_data_science_spark.pregel.superstep import (
     SuperstepLoop,
     materialize_roundtrip,
@@ -99,13 +99,12 @@ def label_propagation(
         edges = edges.join(nw, "dst", "left").withColumn(
             "weight", F.col("weight") * F.coalesce(F.col("node_w"), F.lit(1.0))
         ).drop("node_w")
-    edges = edges.repartition(spark.sparkContext.defaultParallelism, "dst").persist()
-    edges.count()
-    # LPA pulls: the vote gather joins edges to labels on DST, so a hot
-    # in-degree hub is the straggler here — salt its edges on src-hash
-    # (same fix as the rank loops'/WCC's src-keyed salting; votes are a
-    # sum-by-(src,label) aggregate, which recombines exactly).
-    edges, hot = salt_hot_keys(edges, hot_degree_threshold, key="dst", spread="src")
+    # LPA pulls: the vote gather joins edges to labels on DST, so the cache
+    # is keyed on dst and a hot in-degree hub is the straggler here — salt
+    # its edges on src-hash (same fix as the rank loops'/WCC's src-keyed
+    # salting; votes are a sum-by-(src,label) aggregate, which recombines
+    # exactly).
+    edges, hot = cache_edges(edges, hot_degree_threshold, key="dst", spread="src")
 
     loop = SuperstepLoop(
         spark,

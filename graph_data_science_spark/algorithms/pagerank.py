@@ -59,25 +59,21 @@ def _normalized_edges(
     graph: LinkGraph,
     weighted: bool,
     extra_denominator: float = 0.0,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """edges + norm_w = w / (Σ_out w [+ extra]); unweighted w ≡ 1.
 
-    Single-shuffle plan: the edges are hash-partitioned by ``src`` ONCE and
-    the out-degree (Σ strictly-positive weights, GDS
-    ``DegreeFunctions.java:39-56``) is a window sum over that clustering —
-    no groupBy + edge-side re-join round trip (which cost two extra
-    full-edge exchanges at every graph build). The window's required sort
-    (``src``) is the very ordering ``prep_edges_sql`` wants, so the SQL
-    message path passes ``clustered=True`` downstream and the whole build
-    is one exchange + one sort. Output partitioning: HashPartitioning(src,
-    num_partitions) — callers passing ``clustered=True`` to the prep MUST
-    pass the same ``num_partitions`` here."""
+    Single-shuffle plan: the edges are hash-partitioned by ``src`` ONCE
+    (into ``spark.sql.shuffle.partitions``) and the out-degree (Σ
+    strictly-positive weights, GDS ``DegreeFunctions.java:39-56``) is a
+    window sum over that partitioning — no groupBy + edge-side re-join
+    round trip (which cost two extra full-edge exchanges at every graph
+    build). The output is already partitioned and sorted by ``src`` the
+    way ``spmv.cache_edges`` lays out its cache, so Spark drops the
+    cache's own repartition and the whole build is one exchange + one
+    sort."""
     from pyspark.sql import Window
 
-    spark = graph.edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = int(graph.edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     e = graph.edges
     if not weighted:
         e = e.select("src", "dst", F.lit(1.0).alias("weight"))
@@ -85,7 +81,7 @@ def _normalized_edges(
     deg = F.sum(pos).over(Window.partitionBy("src"))
     return (
         e.select("src", "dst", "weight")
-        .repartition(num_partitions, "src")
+        .repartition(parts, "src")
         .select(
             "src",
             "dst",
@@ -106,7 +102,6 @@ def _rank_loop(
     source_nodes: list[int] | None,
     checkpoint_dir: str | None,
     name: str,
-    num_blocks: int | None,
     hot_degree_threshold: int,
     initial_scores: DataFrame | None = None,
 ) -> RankResult:
@@ -114,11 +109,7 @@ def _rank_loop(
     superstep's messages come from ``spmv.sql_message_path``."""
     spark = norm_edges.sparkSession
     n = graph.with_node_count()
-    # norm_edges came out of the window normalization already
-    # hash-partitioned by src at num_blocks — skip the re-exchange.
-    prepped, msg_fn = sql_message_path(
-        norm_edges, num_blocks, hot_degree_threshold, clustered=True
-    )
+    prepped, msg_fn = sql_message_path(norm_edges, hot_degree_threshold)
     # auto_free_prev=False: committed delta frames are retained in `pending`
     # until the next fold — _fold() frees them once summed.
     loop = SuperstepLoop(
@@ -304,7 +295,6 @@ def pagerank(
     weighted: bool = False,
     source_nodes: list[int] | None = None,
     checkpoint_dir: str | None = None,
-    num_blocks: int | None = None,
     hot_degree_threshold: int = 2_000_000,
     initial_scores: DataFrame | None = None,
 ) -> RankResult:
@@ -314,10 +304,10 @@ def pagerank(
     converged graph costs zero message rounds and a slightly-grown graph
     costs work proportional to the drift. Scores converge to the same
     fixpoint as a cold run (power iteration is start-independent)."""
-    norm = _normalized_edges(graph, weighted, num_partitions=num_blocks)
+    norm = _normalized_edges(graph, weighted)
     return _rank_loop(
         graph, norm, damping, tolerance, max_iterations, source_nodes,
-        checkpoint_dir, "pagerank", num_blocks, hot_degree_threshold,
+        checkpoint_dir, "pagerank", hot_degree_threshold,
         initial_scores=initial_scores,
     )
 
@@ -330,7 +320,6 @@ def article_rank(
     weighted: bool = False,
     source_nodes: list[int] | None = None,
     checkpoint_dir: str | None = None,
-    num_blocks: int | None = None,
 ) -> RankResult:
     """PageRank variant: message denominator degree + avgDegree
     (reference ArticleRankComputation.java; avg degree =
@@ -341,12 +330,10 @@ def article_rank(
     # via node_ids() (the vertex table when one exists).
     n = graph.node_ids().count()
     avg_deg = (graph.edges.count() / n) if n else 0.0
-    norm = _normalized_edges(
-        graph, weighted, extra_denominator=float(avg_deg), num_partitions=num_blocks
-    )
+    norm = _normalized_edges(graph, weighted, extra_denominator=float(avg_deg))
     return _rank_loop(
         graph, norm, damping, tolerance, max_iterations, source_nodes,
-        checkpoint_dir, "article_rank", num_blocks, 2_000_000,
+        checkpoint_dir, "article_rank", 2_000_000,
     )
 
 
@@ -357,7 +344,6 @@ def eigenvector(
     weighted: bool = False,
     source_nodes: list[int] | None = None,
     checkpoint_dir: str | None = None,
-    num_blocks: int | None = None,
     hot_degree_threshold: int = 2_000_000,
 ) -> RankResult:
     """Eigenvector centrality, exact GDS semantics
@@ -385,17 +371,10 @@ def eigenvector(
     # when present), not the id-space bound.
     n = graph.node_ids().count()
     if weighted:
-        # w / Σ_out w, positive weights; window-normalized output is already
-        # src-clustered at num_blocks, so the prep adds no exchange.
-        norm = _normalized_edges(graph, True, num_partitions=num_blocks)
-        prepped, msg_fn = sql_message_path(
-            norm, num_blocks, hot_degree_threshold, clustered=True
-        )
+        norm = _normalized_edges(graph, True)  # w / Σ_out w, positive weights
     else:
         norm = graph.edges.select("src", "dst", F.lit(1.0).alias("norm_w"))
-        prepped, msg_fn = sql_message_path(
-            norm, num_blocks, hot_degree_threshold, clustered=False
-        )
+    prepped, msg_fn = sql_message_path(norm, hot_degree_threshold)
     loop = SuperstepLoop(
         spark,
         "eigenvector",

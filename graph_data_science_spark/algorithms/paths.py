@@ -14,9 +14,10 @@ Reference semantics:
 Spark execution — frontier Bellman-Ford, the scale-correct shape for both
 delta-stepping and Bellman-Ford on a shuffle engine:
 
-- the edge table is hash-partitioned by ``src`` once and cached
-  (``prep_edges_sql``); every relaxation round co-locates on the cached
-  side, only the (shrinking) frontier shuffles;
+- the edge table is hash-partitioned and sorted by ``src`` once and
+  cached (``spmv.cache_edges``, which also salts mega-hub sources); every
+  relaxation round co-locates on the cached side, only the (shrinking)
+  frontier shuffles;
 - a round relaxes ONLY the frontier (nodes improved last round):
   ``candidate(v) = min_{(u,v)} dist(u) + w(u,v)`` — one join + one
   min-aggregate, all whole-stage codegen (this is Pregel's
@@ -39,11 +40,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph.build import LinkGraph
-from graph_data_science_spark.pregel.spmv import (
-    prep_edges_sql,
-    prep_edges_sql_skew,
-    salted_gather_join,
-)
+from graph_data_science_spark.pregel.spmv import cache_edges, salted_gather_join
 from graph_data_science_spark.pregel.superstep import SuperstepLoop
 
 
@@ -62,7 +59,6 @@ def shortest_paths(
     weighted: bool = True,
     max_iterations: int | None = None,
     checkpoint_dir: str | None = None,
-    num_blocks: int | None = None,
     hot_degree_threshold: int = 2_000_000,
 ) -> PathResult:
     """Single-source shortest distances. ``weighted=False`` treats every
@@ -73,9 +69,8 @@ def shortest_paths(
     if max_iterations is None:
         max_iterations = n + 1
     e = graph.edges if weighted else graph.edges.select("src", "dst", F.lit(1.0).alias("weight"))
-    prepped, _hot = prep_edges_sql_skew(
-        e.select("src", "dst", F.col("weight").alias("norm_w")),
-        num_blocks,
+    prepped, _hot = cache_edges(
+        e.select("src", "dst", F.col("weight").cast("double").alias("norm_w")),
         hot_degree_threshold,
     )
 
@@ -140,7 +135,6 @@ def delta_stepping(
     weighted: bool = True,
     max_iterations: int | None = None,
     checkpoint_dir: str | None = None,
-    num_blocks: int | None = None,
     hot_degree_threshold: int = 2_000_000,
 ) -> PathResult:
     """Single-source shortest distances with REAL delta-stepping bucket
@@ -180,9 +174,8 @@ def delta_stepping(
     if max_iterations is None:
         max_iterations = 4 * (n + 1)
     e = graph.edges if weighted else graph.edges.select("src", "dst", F.lit(1.0).alias("weight"))
-    prepped, _hot = prep_edges_sql_skew(
-        e.select("src", "dst", F.col("weight").alias("norm_w")),
-        num_blocks,
+    prepped, _hot = cache_edges(
+        e.select("src", "dst", F.col("weight").cast("double").alias("norm_w")),
         hot_degree_threshold,
     )
 
@@ -289,7 +282,6 @@ def all_shortest_paths(
     max_iterations: int | None = None,
     exact_source_limit: int | None = None,
     checkpoint_dir: str | None = None,
-    num_blocks: int | None = None,
     hot_degree_threshold: int = 2_000_000,
 ) -> AllShortestPathsResult:
     """All-pairs shortest distances, streamed as (source, target, distance)
@@ -332,9 +324,8 @@ def all_shortest_paths(
         src_frame = graph.node_ids()
 
     e = graph.edges if weighted else graph.edges.select("src", "dst", F.lit(1.0).alias("weight"))
-    prepped, _hot = prep_edges_sql_skew(
-        e.select("src", "dst", F.col("weight").alias("norm_w")),
-        num_blocks,
+    prepped, _hot = cache_edges(
+        e.select("src", "dst", F.col("weight").cast("double").alias("norm_w")),
         hot_degree_threshold,
     )
 
@@ -433,7 +424,6 @@ def dijkstra(
     targets: list[int] | None = None,
     weighted: bool = True,
     max_iterations: int | None = None,
-    num_blocks: int | None = None,
     heuristic: DataFrame | None = None,
     hot_degree_threshold: int = 2_000_000,
 ) -> DijkstraResult:
@@ -485,9 +475,8 @@ def dijkstra(
     if max_iterations is None:
         max_iterations = n + 1
     e = graph.edges if weighted else graph.edges.select("src", "dst", F.lit(1.0).alias("weight"))
-    prepped, _hot = prep_edges_sql_skew(
-        e.select("src", "dst", F.col("weight").alias("norm_w")),
-        num_blocks,
+    prepped, _hot = cache_edges(
+        e.select("src", "dst", F.col("weight").cast("double").alias("norm_w")),
         hot_degree_threshold,
     )
     _mark = roundtrip_mark()

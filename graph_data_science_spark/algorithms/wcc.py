@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph.build import LinkGraph
-from graph_data_science_spark.pregel.spmv import salt_hot_keys, salted_gather_join
+from graph_data_science_spark.pregel.spmv import cache_edges, salted_gather_join
 from graph_data_science_spark.pregel.superstep import (
     SuperstepLoop,
     free_checkpointed,
@@ -75,9 +75,7 @@ def wcc(
         e = e.filter(F.col("weight") > threshold)
     # Symmetrize once; parallel edges are harmless under min().
     sym = e.select("src", "dst").union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = sym.repartition(spark.sparkContext.defaultParallelism, "src").persist()
-    sym.count()
-    sym, hot = salt_hot_keys(sym, hot_degree_threshold)
+    sym, hot = cache_edges(sym, hot_degree_threshold)
 
     loop = SuperstepLoop(
         spark,
@@ -225,12 +223,11 @@ def wcc_star(
     e = graph.edges
     if threshold is not None:
         e = e.filter(F.col("weight") > threshold)
-    par = spark.sparkContext.defaultParallelism
     pairs = (
         e.select(F.least("src", "dst").alias("s"), F.greatest("src", "dst").alias("b"))
         .filter(F.col("s") != F.col("b"))
         .distinct()
-        .repartition(par, "b")
+        .repartition("b")
     )
 
     # auto_free_prev=False: the convergence full-outer join reads the

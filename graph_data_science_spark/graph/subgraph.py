@@ -203,7 +203,8 @@ def cnarw_sample(
     accepted with probability ``1 − overlap(u, v)`` where
     ``overlap = |N(u)∩N(v)| / min(|N(u)|,|N(v)|)`` (the reference's
     OverlapSimilarity on sorted adjacency) — rejected draws resample. This
-    reaches fringe regions faster than uniform RWR on clustered graphs.
+    reaches fringe regions faster than uniform RWR on graphs with a high
+    clustering coefficient.
 
     Distributed shape: the per-step rejection loop needs overlap(u, v) for
     *adjacent* pairs only, so it is precomputed ONCE as a DataFrame (a

@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph.build import LinkGraph
-from graph_data_science_spark.pregel.spmv import prep_edges_sql_skew, salted_gather_join
+from graph_data_science_spark.pregel.spmv import cache_edges, salted_gather_join
 from graph_data_science_spark.pregel.superstep import SuperstepLoop
 
 _REDUCERS = {"sum": F.sum, "min": F.min, "max": F.max, "count": F.count}
@@ -115,7 +115,6 @@ def run_pregel(
     computation: PregelComputation,
     max_iterations: int = 20,
     checkpoint_dir: str | None = None,
-    num_partitions: int | None = None,
     hot_degree_threshold: int = 2_000_000,
 ) -> PregelResult:
     """Run a :class:`PregelComputation` over ``graph`` (NATURAL
@@ -134,12 +133,11 @@ def run_pregel(
     n = graph.with_node_count()
 
     # Every built-in reducer is associative, so the hot-source salting of
-    # the native loops applies to user programs too (spmv.salt_hot_keys):
+    # the native loops applies to user programs too (spmv.cache_edges):
     # hot senders' edges spread across salt sub-partitions, their sender
     # rows replicated per salt by the gather.
-    prepped, hot = prep_edges_sql_skew(
-        graph.edges.select("src", "dst", F.col("weight").alias("norm_w")),
-        num_partitions,
+    prepped, hot = cache_edges(
+        graph.edges.select("src", "dst", F.col("weight").cast("double").alias("norm_w")),
         hot_degree_threshold,
     )
     degrees = prepped.groupBy(F.col("src").alias("node")).agg(

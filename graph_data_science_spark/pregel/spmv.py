@@ -6,25 +6,28 @@ reduces messages atomically on send (reference
 ``core/.../partition/PartitionUtils.java:50,126-204``). The Spark
 re-expression (SURVEY.md §2.C, §3.3) has two paths:
 
-- **JVM path (scalar, reducible messages)**: the edge table is cached
-  hash-partitioned and sorted by its join key (``prep_edges_sql``), so the
+- **JVM path (scalar, reducible messages)**: :func:`cache_edges` is the
+  one place an edge-side layout is decided — the CSR analog GDS builds
+  once per projection (``CSRGraphStore.java:80``). It hash-partitions the
+  edges by the gather's join key into ``spark.sql.shuffle.partitions``,
+  sorts within partitions by that key and caches the result, so the
   per-round edge⋈state join reads the edge side without an exchange or a
   sort; ``groupBy(dst)`` with a reducible aggregate finishes the reduction
   (Catalyst's partial+final hash aggregation is the reduce-on-send
   analog). Every scalar loop — the rank family, WCC, label propagation,
-  the path relaxations, user Pregel programs — runs here.
-- **Skew (DEGREE partitioning analog)**: the decision lives in ONE place,
-  :func:`salt_hot_keys`. A hot key whose degree exceeds
-  ``hot_degree_threshold`` has its edges re-clustered across
+  the path relaxations, user Pregel programs — gathers from such a cache.
+- **Skew (DEGREE partitioning analog)**: :func:`cache_edges` also makes
+  the skew decision. A hot key whose degree exceeds
+  ``hot_degree_threshold`` has its edges spread across
   ``ceil(degree/threshold)`` salt sub-partitions by a hash of the other
   endpoint; :func:`salted_gather_join` replicates the matching state rows
   per salt. It is the only gather that branches on whether the graph is
   skewed, so every loop inherits the fix.
 - **Arrow/CSR path (array state only)**: ``build_blocks`` range-blocks
-  edges by source id and a cogrouped ``applyInPandas`` kernel sums
-  ``state[src].vec * norm_w`` per destination
-  (``spmv_messages_arrays``) — for embedding-valued state Catalyst can't
-  sum efficiently (FastRP).
+  edges by source id (salting hot sources with the same detector) and a
+  cogrouped ``applyInPandas`` kernel sums ``state[src].vec * norm_w`` per
+  destination (``spmv_messages_arrays``) — for embedding-valued state
+  Catalyst can't sum efficiently (FastRP).
 """
 
 from __future__ import annotations
@@ -36,6 +39,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _shuffle_partitions(spark) -> int:
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _check_threshold(hot_degree_threshold: int) -> None:
+    # Below 1 the salt count ceil(degree / threshold) divides by zero or
+    # goes negative; fail before any edge cache is built.
+    if hot_degree_threshold < 1:
+        raise ValueError(f"hot_degree_threshold must be >= 1, got {hot_degree_threshold}")
 
 
 @dataclass
@@ -56,7 +70,6 @@ class BlockedEdges:
 def build_blocks(
     edges: DataFrame,
     node_count: int,
-    num_blocks: int | None = None,
     hot_degree_threshold: int = 2_000_000,
     weight_col: str = "norm_w",
 ) -> BlockedEdges:
@@ -68,12 +81,12 @@ def build_blocks(
     Arrow group — at 100 TB scale this is what keeps mega-hub vertices (a
     tool entity linked from millions of turns) from blowing up one task.
     """
+    _check_threshold(hot_degree_threshold)
     spark = edges.sparkSession
-    if num_blocks is None:
-        # Match the session's shuffle partitioning so the cogroup's required
-        # clustering is satisfied by the cache — the edge side is shuffled
-        # ONCE here and never re-exchanged across supersteps.
-        num_blocks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # Match the session's shuffle partitioning so the cogroup's required
+    # clustering is satisfied by the cache — the edge side is shuffled
+    # ONCE here and never re-exchanged across supersteps.
+    num_blocks = _shuffle_partitions(spark)
     block_width = max(1, math.ceil(node_count / num_blocks))
 
     # One-time sanity check: an out-of-range id would be *silently dropped*
@@ -93,20 +106,8 @@ def build_blocks(
     )
 
     # Salt hot sources: ceil(out_degree / threshold) sub-groups hashed on dst.
-    deg = edges.groupBy("src").agg(F.count("*").alias("_deg"))
-    hot = deg.filter(F.col("_deg") > hot_degree_threshold).withColumn(
-        "_nsalt", F.ceil(F.col("_deg") / F.lit(hot_degree_threshold)).cast("int")
-    )
-    if hot.limit(1).count() > 0:
-        e = e.join(F.broadcast(hot.select("src", "_nsalt")), "src", "left").withColumn(
-            "salt",
-            F.when(
-                F.col("_nsalt").isNotNull(),
-                F.pmod(F.xxhash64("dst"), F.col("_nsalt")).cast("int"),
-            ).otherwise(F.lit(0)),
-        ).drop("_nsalt")
-    else:
-        e = e.withColumn("salt", F.lit(0))
+    hot = _hot_keys(edges, hot_degree_threshold, "src")
+    e = e.withColumn("salt", F.lit(0)) if hot is None else _with_salt(e, hot, "src", "dst")
 
     blocks = e.select("block", "salt", "src", "dst", "norm_w").repartition(
         num_blocks, "block", "salt"
@@ -130,39 +131,64 @@ def build_blocks(
     )
 
 
-def prep_edges_sql(
+def cache_edges(
     edges: DataFrame,
-    num_partitions: int | None = None,
-    weight_col: str = "norm_w",
-    clustered: bool = False,
-) -> DataFrame:
-    """One-time prep for the JVM-side message path: hash-partition the edge
-    table by src, SORT within partitions by src, and cache it.
+    hot_degree_threshold: int,
+    key: str = "src",
+    spread: str = "dst",
+) -> tuple[DataFrame, DataFrame | None]:
+    """Build the cached edge side of a scalar gather: hash-partition
+    ``edges`` by ``key`` into ``spark.sql.shuffle.partitions``, sort within
+    partitions by ``key``, cache, and make the engine's one skew decision.
 
     The sort is the load-bearing part for superstep cost: the per-round
-    state join plans as a SortMergeJoin, and a cached relation advertises
-    its outputPartitioning AND outputOrdering — so a pre-sorted cache
+    state join plans as a SortMergeJoin once the state outgrows the
+    broadcast threshold, and a cached relation advertises its
+    outputPartitioning AND outputOrdering — so a pre-sorted cache
     satisfies both SMJ requirements and every superstep skips the
     exchange *and* the O(|E| log |E|) sort on the edge side; only the
     (much smaller) vertex state is exchanged + sorted per round. Unsorted,
-    Spark re-sorts the full edge table every superstep.
+    Spark re-sorts the full edge table every superstep. When ``edges`` is
+    already hash-partitioned by ``key`` into the same partition count (the
+    rank family's window normalization), Spark drops the repartition, so
+    the build stays one full-edge shuffle.
 
-    ``clustered=True``: the caller guarantees ``edges`` is ALREADY
-    hash-partitioned by ``src`` into ``num_partitions`` partitions (e.g. it
-    came out of the window-based degree normalization, whose exchange is
-    the same clustering) — the redundant repartition is skipped, making
-    graph build a single full-edge shuffle end to end."""
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    prepped = edges.select(
-        "src", "dst", F.col(weight_col).cast("double").alias("norm_w")
+    ``key``: the edge column the per-round state join keys on — ``src``
+    for push/gather-from-source loops (rank family, WCC, paths), ``dst``
+    for pull loops (label propagation votes). ``spread``: the other
+    endpoint, whose hash picks a hot key's salt sub-group.
+
+    Returns ``(edges, hot)``. On an unskewed graph ``hot`` is None and
+    ``edges`` is the sorted cache. Otherwise ``hot`` is a tiny
+    broadcastable ``(src long, nsalt int)`` map (``nsalt =
+    ceil(degree/threshold)``; the column is named ``src`` whatever the
+    key) and the cache is rebuilt hash-partitioned AND sorted on ``(key,
+    salt)`` with ``salt = pmod(xxhash64(spread), nsalt)`` for hot keys (0
+    otherwise) — the same other-endpoint-hash sub-grouping as the Arrow
+    path's ``build_blocks``. Every superstep's join then still reads the
+    edge side exchange-free and sort-free. Skewed graphs pay ONE extra
+    full-edge shuffle at build time and get flat superstep task
+    histograms in return: a mega-hub key (a tool entity linked from
+    millions of turns) no longer lands all its edges in one straggler
+    task that AQE (disabled inside superstep commits) cannot split. Pair
+    with :func:`salted_gather_join` (same ``key`` as its ``edge_key``).
+    """
+    _check_threshold(hot_degree_threshold)
+    n = _shuffle_partitions(edges.sparkSession)
+    cached = edges.repartition(n, key).sortWithinPartitions(key).persist()
+    cached.count()
+    hot = _hot_keys(cached, hot_degree_threshold, key)
+    if hot is None:
+        return cached, None
+    salted = (
+        _with_salt(cached, hot, key, spread)
+        .repartition(n, key, "salt")
+        .sortWithinPartitions(key, "salt")
+        .persist()
     )
-    if not clustered:
-        prepped = prepped.repartition(num_partitions, "src")
-    prepped = prepped.sortWithinPartitions("src").persist()
-    prepped.count()
-    return prepped
+    salted.count()
+    cached.unpersist()
+    return salted, hot
 
 
 def spmv_messages_sql(
@@ -251,38 +277,17 @@ def spmv_messages_arrays(
     )
 
 
-def detect_hot_sources(
-    prepped_edges: DataFrame, hot_degree_threshold: int, key: str = "src"
+def _hot_keys(
+    edges: DataFrame, hot_degree_threshold: int, key: str
 ) -> DataFrame | None:
-    """Find sources whose out-degree exceeds ``hot_degree_threshold`` in a
-    prepped (src-clustered, cached) edge table.
-
-    Returns a tiny broadcastable DataFrame ``(src long, nsalt int)`` with
-    ``nsalt = ceil(degree / threshold)`` sub-groups per hot source, or
-    ``None`` when the graph has no hot sources (the common case — the
-    gather then keeps the plain single-key join).
-
-    Why this matters on the JVM message path: ``spmv_messages_sql`` joins
-    edges to state on ``src`` under the cached HashPartitioning(src), so a
-    mega-hub source (a tool entity linked from millions of turns in the
-    10^12-turn transcript graph) lands ALL its out-edges in one partition —
-    one straggler task per superstep that AQE cannot split (adaptive
-    execution is deliberately disabled inside superstep commits, see
-    ``superstep.py:commit``). This is the SQL-path analog of the Arrow
-    path's DEGREE-partitioning salting (``build_blocks``; reference
-    ``core/.../partition/PartitionUtils.java:126-204``).
-
-    Cost: one aggregate over the already-cached prep (clustering satisfied
-    → no exchange) + a driver collect bounded by |E|/threshold rows.
-
-    ``key``: the edge column the per-round state join keys on — ``src``
-    for push/gather-from-source loops (rank family, WCC), ``dst`` for
-    pull loops (label propagation votes). The returned hot map always
-    names its column ``src`` so :func:`salt_hot_keys` and
-    :func:`salted_gather_join` compose either way.
-    """
+    """``(src long, nsalt int)`` for every ``key`` value whose edge count
+    exceeds ``hot_degree_threshold``, ``nsalt = ceil(degree / threshold)``;
+    None when there are none (the common case — the gather then keeps the
+    plain single-key join). One aggregate (exchange-free over a
+    ``key``-partitioned cache) plus a driver collect bounded by
+    |E|/threshold rows."""
     hot_rows = (
-        prepped_edges.groupBy(key)
+        edges.groupBy(key)
         .agg(F.count("*").alias("_deg"))
         .filter(F.col("_deg") > hot_degree_threshold)
         .select(
@@ -293,41 +298,15 @@ def detect_hot_sources(
     )
     if not hot_rows:
         return None
-    spark = prepped_edges.sparkSession
-    return spark.createDataFrame(
+    return edges.sparkSession.createDataFrame(
         [(int(r["src"]), int(r["nsalt"])) for r in hot_rows], "src long, nsalt int"
     )
 
 
-def salt_hot_keys(
-    edges: DataFrame,
-    hot_degree_threshold: int,
-    key: str = "src",
-    spread: str = "dst",
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """The engine's one skew decision: detect hot ``key`` values in a
-    cached, ``key``-clustered edge table and, if there are any, re-cluster
-    the cache on ``(key, salt)`` and unpersist the old one.
-
-    Returns ``(edges, hot)``. On an unskewed graph ``hot`` is None and
-    ``edges`` is the input cache untouched (unchanged plans). Otherwise
-    ``salt = pmod(xxhash64(spread), nsalt)`` for hot keys (0 otherwise) —
-    the same other-endpoint-hash sub-grouping as the Arrow path's
-    ``build_blocks`` — and the new cache is hash-partitioned AND sorted on
-    ``(key, salt)``, so every superstep's SortMergeJoin still reads the
-    edge side exchange-free and sort-free; only the (small) state side is
-    exchanged per round, exactly as in the unsalted plan. Skewed graphs
-    pay ONE extra full-edge shuffle at build time and get flat superstep
-    task histograms in return. Pair with :func:`salted_gather_join`
-    (same ``key`` as its ``edge_key``).
-    """
-    hot = detect_hot_sources(edges, hot_degree_threshold, key=key)
-    if hot is None:
-        return edges, None
-    if num_partitions is None:
-        num_partitions = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    salted = (
+def _with_salt(edges: DataFrame, hot: DataFrame, key: str, spread: str) -> DataFrame:
+    """``edges`` plus ``salt = pmod(xxhash64(spread), nsalt)`` for hot
+    ``key`` values, 0 for the rest."""
+    return (
         edges.join(F.broadcast(hot.withColumnRenamed("src", key)), key, "left")
         .withColumn(
             "salt",
@@ -337,55 +316,18 @@ def salt_hot_keys(
             ).otherwise(F.lit(0)),
         )
         .drop("nsalt")
-        .repartition(num_partitions, key, "salt")
-        .sortWithinPartitions(key, "salt")
-        .persist()
     )
-    salted.count()
-    edges.unpersist()
-    return salted, hot
 
 
-def sql_message_path(
-    norm_edges: DataFrame,
-    num_partitions: int | None,
-    hot_degree_threshold: int,
-    clustered: bool,
-):
-    """Build the cached edge side of the JVM-only message path, salting hot
-    sources when the graph is skewed.
-
-    Returns ``(prepped_edges, msg_fn)`` where ``msg_fn(state)`` computes the
-    per-round reducible-sum messages. The common (unskewed) case is the
-    plain ``prep_edges_sql`` + single-key join — unchanged plan, one cheap
-    cached aggregate added at build to *prove* there is no hot source. When
-    some source's out-degree exceeds ``hot_degree_threshold`` (a mega-hub
-    entity in the transcript link graph), the cache is re-clustered on
-    ``(src, salt)`` and every superstep joins salted — the hub's gather
-    becomes ``ceil(degree/threshold)`` parallel tasks instead of one
-    straggler that AQE (disabled inside superstep commits) cannot split.
-    Measured on a 20M-edge graph with one source owning half the edges:
-    9.93 → 3.58 s median superstep (`bench_experiments/skew_ab_*`).
-    """
-    prepped, hot = prep_edges_sql_skew(
-        norm_edges, num_partitions, hot_degree_threshold, clustered=clustered
-    )
-    return prepped, (lambda active: spmv_messages_sql(prepped, hot, active))
-
-
-def prep_edges_sql_skew(
-    norm_edges: DataFrame,
-    num_partitions: int | None,
-    hot_degree_threshold: int,
-    clustered: bool = False,
-):
-    """``prep_edges_sql`` + :func:`salt_hot_keys` on ``src``: returns
-    ``(prepped, hot)`` for loops whose gather is NOT a plain weighted sum
-    (min-relaxation frontiers, user Pregel reducers). Pair with
-    :func:`salted_gather_join` and apply the loop's own (reducible)
-    aggregate on top."""
-    prepped = prep_edges_sql(norm_edges, num_partitions=num_partitions, clustered=clustered)
-    return salt_hot_keys(prepped, hot_degree_threshold, num_partitions=num_partitions)
+def sql_message_path(norm_edges: DataFrame, hot_degree_threshold: int):
+    """The rank family's edge side: :func:`cache_edges` over
+    ``norm_edges`` = ``(src, dst, norm_w double)``. Returns ``(cached_edges, msg_fn)`` where
+    ``msg_fn(state)`` computes the per-round reducible-sum messages
+    (:func:`spmv_messages_sql`). Measured on a 20M-edge graph with one
+    source owning half the edges, salting took the median superstep from
+    9.93 to 3.58 s (`bench_experiments/skew_ab_*`)."""
+    cached, hot = cache_edges(norm_edges, hot_degree_threshold)
+    return cached, (lambda active: spmv_messages_sql(cached, hot, active))
 
 
 def salted_gather_join(
@@ -396,7 +338,7 @@ def salted_gather_join(
     edge_key: str = "src",
 ) -> DataFrame:
     """The per-round edges ⋈ state join on ``edge_key``, salted when
-    ``hot`` is set (the ``hot`` that :func:`salt_hot_keys` returned for the
+    ``hot`` is set (the ``hot`` that :func:`cache_edges` returned for the
     same key). The caller applies its own aggregate on the result — which
     must be reducible (sum/min/max/count) for salting to recombine exactly,
     since a hot key's rows arrive in ``nsalt`` partial groups."""

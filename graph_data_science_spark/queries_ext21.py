@@ -3,7 +3,7 @@
 ``pagerank_hub_salted``: PageRank over the REVERSED supply web — regions
 fan out to nations, nations to their customers and suppliers, customers
 to their orders — with ``hot_degree_threshold=5``, which forces the SQL
-message path's hot-source salting (`pregel/spmv.py:salt_hot_keys`
+message path's hot-source salting (`pregel/spmv.py:cache_edges`
 / `salted_gather_join`) to engage: at sf0.01 every nation has
 out-degree ~70 (ceil(70/5)=14 salt sub-groups) and every customer ~10.
 Salting is a pure partitioning change, so the DuckDB oracle is the same

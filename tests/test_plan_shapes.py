@@ -12,7 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from graph_data_science_spark.algorithms.pagerank import _normalized_edges  # noqa: E402
 from graph_data_science_spark.graph.build import LinkGraph  # noqa: E402
-from graph_data_science_spark.pregel.spmv import prep_edges_sql  # noqa: E402
+from graph_data_science_spark.pregel.spmv import cache_edges  # noqa: E402
 
 
 def _physical(df) -> str:
@@ -24,13 +24,15 @@ def test_rank_graph_build_is_single_shuffle(spark):
         [(i, (i * 7) % 100, 1.0 + (i % 3)) for i in range(1000)],
         "src long, dst long, weight double",
     )
-    norm = _normalized_edges(LinkGraph(edges=edges), weighted=True, num_partitions=4)
-    prepped = prep_edges_sql(norm, num_partitions=4, clustered=True)
+    norm = _normalized_edges(LinkGraph(edges=edges), weighted=True)
+    prepped, hot = cache_edges(norm, hot_degree_threshold=2_000_000)
+    assert hot is None
     plan = _physical(prepped)
-    # The cached prep plan must contain exactly ONE Exchange (the
-    # hash-partition by src that the window normalization and the
-    # per-superstep join both reuse). AQE prints the final plan plus an
-    # "Initial Plan" copy — count only the final section.
+    # The cached edge plan must contain exactly ONE Exchange (the
+    # hash-partition by src that the window normalization, the cache and
+    # the per-superstep join all reuse: Spark drops the cache's own
+    # repartition). AQE prints the final plan plus an "Initial Plan"
+    # copy — count only the final section.
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("Exchange") == 1, final
     prepped.unpersist()

@@ -18,9 +18,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from graph_data_science_spark.algorithms.pagerank import eigenvector, pagerank  # noqa: E402
 from graph_data_science_spark.graph.build import LinkGraph  # noqa: E402
 from graph_data_science_spark.pregel.spmv import (  # noqa: E402
-    detect_hot_sources,
-    prep_edges_sql,
-    salt_hot_keys,
+    build_blocks,
+    cache_edges,
     spmv_messages_sql,
 )
 
@@ -35,35 +34,57 @@ def _skewed_graph(spark):
     )
 
 
-def test_detect_hot_sources(spark):
+def test_cache_edges_detects_hot_keys(spark):
     g = _skewed_graph(spark)
-    prepped = prep_edges_sql(g.edges.select("src", "dst", F.lit(1.0).alias("norm_w")))
-    hot = detect_hot_sources(prepped, hot_degree_threshold=50)
+    norm = g.edges.select("src", "dst", F.lit(1.0).alias("norm_w"))
+    salted, hot = cache_edges(norm, hot_degree_threshold=50)
     rows = {r["src"]: r["nsalt"] for r in hot.collect()}
     assert rows == {0: 5}  # ceil(201/50): 200 hub edges + 1 ring edge
-    assert detect_hot_sources(prepped, hot_degree_threshold=1000) is None
-    prepped.unpersist()
+    assert "salt" in salted.columns
+    salted.unpersist()
+    plain, no_hot = cache_edges(norm, hot_degree_threshold=1000)
+    assert no_hot is None and "salt" not in plain.columns
+    plain.unpersist()
 
 
 def test_salted_messages_match_unsalted(spark):
     g = _skewed_graph(spark)
     norm = g.edges.select("src", "dst", (F.lit(1.0) / F.lit(201.0)).alias("norm_w"))
-    prepped = prep_edges_sql(norm)
     state = spark.range(201).select(
         F.col("id").alias("node"), (F.col("id") + 1.0).alias("msg_val")
     )
-    # An unskewed threshold leaves the cache untouched: same frame, no hot map.
-    same, no_hot = salt_hot_keys(prepped, hot_degree_threshold=1000)
-    assert same is prepped and no_hot is None
+    # An unskewed threshold builds the plain cache: no hot map, no salt.
+    plain, no_hot = cache_edges(norm, hot_degree_threshold=1000)
+    assert no_hot is None and "salt" not in plain.columns
 
-    want = {r["dst"]: r["msg"] for r in spmv_messages_sql(prepped, None, state).collect()}
-    salted, hot = salt_hot_keys(prepped, hot_degree_threshold=50)
+    want = {r["dst"]: r["msg"] for r in spmv_messages_sql(plain, None, state).collect()}
+    salted, hot = cache_edges(norm, hot_degree_threshold=50)
     assert "salt" in salted.columns
     got = {r["dst"]: r["msg"] for r in spmv_messages_sql(salted, hot, state).collect()}
     assert set(got) == set(want)
     for d in want:
         assert got[d] == pytest.approx(want[d], abs=1e-12)
+    plain.unpersist()
     salted.unpersist()
+
+
+@pytest.mark.parametrize("threshold", [0, -1])
+def test_hot_degree_threshold_below_one_is_rejected(spark, threshold):
+    # 0 would divide by zero inside a task, -1 would give every key a
+    # negative salt count; both must fail up front, before any cache.
+    from graph_data_science_spark.algorithms.wcc import wcc
+
+    g = _skewed_graph(spark)
+    with pytest.raises(ValueError, match="hot_degree_threshold"):
+        pagerank(g, hot_degree_threshold=threshold)
+    with pytest.raises(ValueError, match="hot_degree_threshold"):
+        wcc(g, hot_degree_threshold=threshold)
+    with pytest.raises(ValueError, match="hot_degree_threshold"):
+        build_blocks(
+            g.edges.select("src", "dst", F.lit(1.0).alias("norm_w")),
+            201,
+            hot_degree_threshold=threshold,
+        )
 
 
 def test_pagerank_scores_invariant_under_salting(spark):
@@ -135,7 +156,9 @@ def test_label_propagation_invariant_under_salting(spark):
             F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
         )
     )
-    assert detect_hot_sources(rev.edges, 50, key="dst") is not None
+    cached, hot = cache_edges(rev.edges, 50, key="dst", spread="src")
+    assert {r["src"]: r["nsalt"] for r in hot.collect()} == {0: 5}
+    cached.unpersist()
     plain = label_propagation(rev, max_iterations=5)
     salted = label_propagation(rev, max_iterations=5, hot_degree_threshold=50)
     a = {r["node_id"]: r["label"] for r in plain.labels.collect()}
@@ -208,7 +231,9 @@ def test_dag_longest_path_invariant_under_salting(spark):
     g = LinkGraph(
         edges=spark.createDataFrame(fan + mid + sink, "src long, dst long, weight double")
     )
-    assert detect_hot_sources(g.edges, 50) is not None
+    cached, hot = cache_edges(g.edges, 50)
+    assert hot is not None
+    cached.unpersist()
     plain = dag_longest_path(g)
     salted = dag_longest_path(g, hot_degree_threshold=50)
 

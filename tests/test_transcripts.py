@@ -79,16 +79,20 @@ def test_text_equality_roundtrip(spark):
 
 def test_parity_across_parallelism(spark):
     # SURVEY.md §5: identical results independent of partitioning. Same
-    # session, different shuffle/block layout via num_blocks + repartition.
+    # session, different edge-cache and state layout via the session's
+    # shuffle partition count.
     t = synthesize_transcripts(spark, 60, seed=11)
     tg = derive_link_graph(t)
     g = tg.graph
-    r2 = pagerank(g, tolerance=1e-6, max_iterations=25, num_blocks=2)
-    r8 = pagerank(g, tolerance=1e-6, max_iterations=25, num_blocks=8)
-    diff = (
-        r2.scores.withColumnRenamed("score", "s2")
-        .join(r8.scores, "node_id")
-        .agg(F.max(F.abs(F.col("s2") - F.col("score"))).alias("m"))
-        .collect()[0]["m"]
-    )
-    assert diff < 1e-9
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    scores = {}
+    try:
+        for parts in (2, 8):
+            spark.conf.set(key, str(parts))
+            res = pagerank(g, tolerance=1e-6, max_iterations=25)
+            scores[parts] = {r["node_id"]: r["score"] for r in res.scores.collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert scores[2].keys() == scores[8].keys()
+    assert max(abs(scores[2][n] - scores[8][n]) for n in scores[2]) < 1e-9
